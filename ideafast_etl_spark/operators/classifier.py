@@ -40,16 +40,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plan_audit import cached, checkpoint
 from .packing import stable_bucket
 
 _FP = 1_000_000_000  # fixed-point grid for gradient quantization
 _SALT = "qclf"
-
-# r13: persist the feature relation across train+score (see
-# train_and_score_logreg). Module flag for same-process A/B harnesses
-# (the clustering._PERSIST_PTS discipline); False reproduces the plain
-# composed form. Results are bit-identical either way.
-_PERSIST_FEATS = True
 
 
 def doc_features(
@@ -99,6 +94,16 @@ def _margin(weights: list[float]) -> F.Column:
     )
 
 
+def _labelled(
+    feats: DataFrame, labels: DataFrame, id_col: str, label_col: str
+) -> DataFrame:
+    """(id, feats, y): the training population ``feats ⋈ labels`` — the
+    one relation both training and fused scoring read."""
+    return feats.join(labels, id_col).select(
+        id_col, "feats", F.col(label_col).cast("double").alias("y")
+    )
+
+
 def train_logreg(
     feats: DataFrame,
     labels: DataFrame,
@@ -116,28 +121,25 @@ def train_logreg(
     feature index (D+1 result rows), apply the step on the driver. The
     loss is standard logistic loss; the gradient for feature j is
     Σ_docs (σ(w·x) − y)·x_j / n."""
-    joined = feats.join(labels, id_col).select(
-        "feats", F.col(label_col).cast("double").alias("y")
-    )
-    joined = joined.persist()
-    try:
+    with cached(_labelled(feats, labels, id_col, label_col)) as joined:
         return _gd_loop(joined, dim, iters, lr)
-    finally:
-        joined.unpersist()
 
 
 def _gd_loop(joined: DataFrame, dim: int, iters: int, lr: float) -> list[float]:
-    """The GD steps over an already-persisted (…, feats, y) relation —
-    shared by :func:`train_logreg` and :func:`train_and_score_logreg` so
-    the fused form can score off the SAME cached relation."""
-    # r13 job shave (VERDICT r12 #5): the doc count used to be its own
-    # job before the gradient loop. Every feature array from
-    # doc_features ends with the always-on bias feature at idx==dim
-    # (and stable_bucket maps real tokens into [0, dim), so nothing
-    # collides with it) — the FIRST gradient pass therefore carries n
-    # as the per-idx doc count at the bias row, one aggregate column
-    # on a job that runs anyway. iters+1 jobs -> iters jobs; weights
-    # unchanged (same gradient rows, same arithmetic).
+    """The GD steps over a cached (…, feats, y) relation — shared by
+    :func:`train_logreg` and :func:`train_and_score_logreg` so the fused
+    form can score off the SAME cached relation.
+
+    r13 job shave (VERDICT r12 #5): the doc count used to be its own job
+    before the gradient loop. Every feature array from
+    :func:`doc_features` ends with the always-on bias feature at
+    idx==dim (and stable_bucket maps real tokens into [0, dim), so
+    nothing collides with it) — the FIRST gradient pass therefore
+    carries n as the per-idx doc count at the bias row, one aggregate
+    column on a job that runs anyway. iters+1 jobs -> iters jobs;
+    weights unchanged (same gradient rows, same arithmetic). A ``feats``
+    relation without the bias row therefore raises instead of training
+    on n = 0; an empty training population returns zero weights."""
     n = 0
     w = [0.0] * (dim + 1)
     for it in range(iters):
@@ -161,9 +163,14 @@ def _gd_loop(joined: DataFrame, dim: int, iters: int, lr: float) -> list[float]:
             .collect()
         )
         if it == 0:
+            if not grad_rows:
+                return w
             n = next((r["c"] for r in grad_rows if r["idx"] == dim), 0)
             if n == 0:
-                return [0.0] * (dim + 1)
+                raise ValueError(
+                    f"feats has no bias feature at idx == {dim}: build it "
+                    "with doc_features(dim=...) using the same dim"
+                )
         for r in grad_rows:
             w[r["idx"]] -= lr * (r["g"] / _FP) / n
     return w
@@ -178,8 +185,10 @@ def train_and_score_logreg(
     id_col: str = "doc_id",
     label_col: str = "label",
 ) -> DataFrame:
-    """Train then score with the feature relation computed ONCE, scoring
-    off the SAME cached relation the trainer iterates on.
+    """Train then score the training population ``feats ⋈ labels``
+    (the labelled docs — all docs in the declared query) with the
+    feature relation computed ONCE, scoring off the SAME cached relation
+    the trainer iterates on.
 
     Composed separately, ``feats`` (tokenize + explode + two keyed
     aggregations — the query's heaviest subtree) is derived twice: once
@@ -193,36 +202,12 @@ def train_and_score_logreg(
     derivation and one cache total. The doc-count-sized scored result
     (n × 3 narrow columns — the ccnet ``scored`` checkpoint class) is
     eagerly checkpointed before the cache is released. Weights and scores
-    are bit-identical to the composed form for every doc in
-    ``feats ⋈ labels`` (the training population — all docs, in the
-    declared query); audit mode returns the full lazy lineage with
-    nothing cached.
+    are bit-identical to :func:`train_logreg` + :func:`score_logreg` over
+    the same population. The plan audit sees the same join it executes.
     """
-    from ..plan_audit import checkpoints_enabled
-
-    joined = feats.join(labels, id_col).select(
-        id_col, "feats", F.col(label_col).cast("double").alias("y")
-    )
-    do_ckpt = checkpoints_enabled() and _PERSIST_FEATS
-    if not do_ckpt:
-        # plan-audit path / A/B old-variant: the plain composed form
-        w = train_logreg(
-            feats, labels, dim=dim, iters=iters, lr=lr,
-            id_col=id_col, label_col=label_col,
-        )
-        return score_logreg(feats, w, id_col=id_col)
-    joined = joined.persist()
-    try:
+    with cached(_labelled(feats, labels, id_col, label_col)) as joined:
         w = _gd_loop(joined, dim, iters, lr)
-        prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(w)))
-        scored = joined.select(
-            F.col(id_col),
-            F.round(prob, 6).alias("prob"),
-            (prob >= 0.5).alias("predicted"),
-        )
-        return scored.localCheckpoint(eager=True)
-    finally:
-        joined.unpersist()
+        return checkpoint(score_logreg(joined, w, id_col=id_col))
 
 
 def score_logreg(

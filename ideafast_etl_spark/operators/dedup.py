@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import norm_text
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import cached, checkpoint, checkpoints_enabled
 
 # Universal-hash family constants for minhash permutations:
 # h_i(x) = (A[i] * x + B[i]) mod MERSENNE31, over x = shingle hash mod MERSENNE31.
@@ -36,22 +36,6 @@ LSH_BANDS = 8
 LSH_ROWS = 4  # NUM_HASHES / LSH_BANDS
 MINHASH_A = [(i * 2_654_435_761 + 1) % MERSENNE31 for i in range(1, NUM_HASHES + 1)]
 MINHASH_B = [(i * 40_503 + 17) % MERSENNE31 for i in range(1, NUM_HASHES + 1)]
-
-# r12: persist the doc-keyed signature/size aggregate (minhash) and the
-# fingerprint relation (simhash) across their multiple consumers — the
-# column-pruned consumers plant different ReadSchemas below the partial
-# aggregate, so ReusedExchange never fires and the corpus-sized aggregate
-# re-executes per branch. Flags for same-process A/B (tools/ab_jobshave.py).
-_PERSIST_PER_DOC = True
-_PERSIST_SIMHASH_FP = True
-
-# r12 job shave (near_dup_clusters): detect min-label-propagation
-# convergence from a change flag computed INSIDE the label-update
-# projection instead of re-joining new labels to old labels each round —
-# equivalent because labels are monotone non-increasing (new != old iff
-# neighbour_min < old). Module flag for same-process A/B
-# (tools/ab_jobshave.py); parity pinned in tests/test_loop_jobshave.py.
-_FUSED_CC_CHANGE = True
 
 
 def _tokens(col: Column) -> Column:
@@ -316,33 +300,26 @@ def minhash_near_dup_pairs(
     candidates per document."""
     if candidates not in ("all", "star", "auto"):
         raise ValueError(f"unknown candidates mode {candidates!r}")
-    do_ckpt = checkpoints_enabled()
     sh = shingle_rows(_spread(df, id_col), text_col, id_col)
-    if do_ckpt:
-        sh = sh.persist()
-    per_doc_cached = None
-    try:
-        # ONE aggregation computes the shingle count AND all 32 signature
-        # mins, consumed by the banding branch and both size-lookup
-        # branches. r12: PERSIST it (n rows × 34 narrow columns, bounded
-        # by doc count) — per-consumer column pruning plants different
-        # ReadSchemas below the partial aggregate, so the "identical
-        # exchange" this comment used to bank on never canonicalizes
-        # equal and ReusedExchange does NOT fire (measured: the doc-keyed
-        # aggregate over the big shingle cache re-executed per branch;
-        # same root cause as the grid-star fix, OPTIMIZATION_r12 §10b/c).
-        per_doc = sh.select(
-            F.col(id_col), _shingle_hash(F.col("shingle")).alias("h")
-        ).groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_sh"),
-            *[
-                F.min((a * F.col("h") + b) % MERSENNE31).alias(f"mh{i}")
-                for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-            ]
-        )
-        if do_ckpt and _PERSIST_PER_DOC:
-            per_doc = per_doc.persist()
-            per_doc_cached = per_doc
+    # ONE aggregation computes the shingle count AND all 32 signature
+    # mins, consumed by the banding branch and both size-lookup
+    # branches. r12: cache it too (n rows × 34 narrow columns, bounded
+    # by doc count) — per-consumer column pruning plants different
+    # ReadSchemas below the partial aggregate, so the "identical
+    # exchange" this comment used to bank on never canonicalizes
+    # equal and ReusedExchange does NOT fire (measured: the doc-keyed
+    # aggregate over the big shingle cache re-executed per branch;
+    # same root cause as the grid-star fix, OPTIMIZATION_r12 §10b/c).
+    per_doc = sh.select(
+        F.col(id_col), _shingle_hash(F.col("shingle")).alias("h")
+    ).groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_sh"),
+        *[
+            F.min((a * F.col("h") + b) % MERSENNE31).alias(f"mh{i}")
+            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
+        ]
+    )
+    with cached(sh, per_doc) as (sh, per_doc):
         sizes = per_doc.select(id_col, "n_sh")
         sig = per_doc
         bands = F.array(
@@ -423,16 +400,8 @@ def minhash_near_dup_pairs(
             .filter(F.col("jaccard_sim") >= threshold)
             .select("id_a", "id_b", "jaccard_sim")
         )
-        if not do_ckpt:
-            return verified  # plan-audit path: full lineage, nothing cached
         # materialise (small result) before unpersisting the shingle cache
-        out = verified.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            if per_doc_cached is not None:
-                per_doc_cached.unpersist()
-            sh.unpersist()
-    return out
+        return checkpoint(verified)
 
 
 def ngram_jaccard_pairs(
@@ -578,46 +547,27 @@ def near_dup_clusters(
                 .groupBy(edges.id_a.alias(id_col))
                 .agg(F.min("cluster_id").alias("n_min"))
             )
-            if _FUSED_CC_CHANGE:
-                # r12 job shave: labels only ever DECREASE (least of old and
-                # neighbour mins), so "new != old" is exactly
-                # "neighbour_min < old" — compute the change flag inside the
-                # label-update projection instead of re-joining the new
-                # label relation against the old one every round. Same
-                # single convergence-probe job per iteration, one join (and
-                # its exchange/broadcast build) fewer.
-                new_labels = (
-                    labels.join(neighbor_min, id_col, "left")
-                    .select(
-                        F.col(id_col),
-                        F.least(
-                            F.col("cluster_id"),
-                            F.coalesce(F.col("n_min"), F.col("cluster_id")),
-                        ).alias("cluster_id"),
-                        (
-                            F.coalesce(F.col("n_min"), F.col("cluster_id"))
-                            < F.col("cluster_id")
-                        ).alias("__chg"),
-                    )
-                    .persist()
+            # r12 job shave: labels only ever DECREASE (least of old and
+            # neighbour mins), so "new != old" is exactly
+            # "neighbour_min < old" — the change flag is computed inside
+            # the label-update projection, so each round pays one
+            # convergence-probe job and no labels⋈new_labels join.
+            new_labels = (
+                labels.join(neighbor_min, id_col, "left")
+                .select(
+                    F.col(id_col),
+                    F.least(
+                        F.col("cluster_id"),
+                        F.coalesce(F.col("n_min"), F.col("cluster_id")),
+                    ).alias("cluster_id"),
+                    (
+                        F.coalesce(F.col("n_min"), F.col("cluster_id"))
+                        < F.col("cluster_id")
+                    ).alias("__chg"),
                 )
-                changed = new_labels.filter(F.col("__chg")).limit(1).count()
-            else:
-                new_labels = (
-                    labels.join(neighbor_min, id_col, "left")
-                    .select(
-                        F.col(id_col),
-                        F.least(F.col("cluster_id"), F.coalesce(F.col("n_min"), F.col("cluster_id"))).alias("cluster_id"),
-                    )
-                    .persist()
-                )
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), id_col)
-                    .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-                    .limit(1)
-                    .count()
-                )
+                .persist()
+            )
+            changed = new_labels.filter(F.col("__chg")).limit(1).count()
             labels.unpersist()
             labels = new_labels
             if changed == 0:
@@ -741,74 +691,65 @@ def simhash_near_dup_pairs(
     # and the auto diagnostic — each re-derived the full corpus pipeline
     # (distinct tokens → document-frequency cut → 32-bit vote aggregate)
     # because the consumers' pruned schemas defeat exchange reuse.
-    # Persist it, materialize the small verified pair set, release
-    # (the shingle-cache lifecycle; audit mode keeps the lazy lineage).
-    do_ckpt = checkpoints_enabled() and _PERSIST_SIMHASH_FP
-    if do_ckpt:
-        fp = fp.persist()
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = fp.select(F.col(id_col), F.col("simhash"), F.explode(bands).alias("bk")).select(
-        id_col, "simhash", "bk.band", "bk.band_key"
-    )
-    if candidates == "auto":
-        candidates = _auto_candidates(banded, n_bands, auto_pairs_per_doc)
-    if candidates == "star":
-        reps = banded.groupBy("band", "band_key").agg(
-            F.min(id_col).alias("id_a"),
-            F.min_by("simhash", id_col).alias("sh_a"),
+    # Cache it, materialize the small verified pair set, release (the
+    # shingle-cache lifecycle).
+    with cached(fp) as fp:
+        bands = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftright(F.col("simhash"), b * band_bits)
+                    .bitwiseAND(F.lit((1 << band_bits) - 1))
+                    .alias("band_key"),
+                )
+                for b in range(n_bands)
+            ]
         )
-        cands = (
-            banded.join(reps, ["band", "band_key"])
-            .filter(F.col(id_col) > F.col("id_a"))
-            .select(
-                "id_a",
-                F.col(id_col).alias("id_b"),
-                "sh_a",
-                F.col("simhash").alias("sh_b"),
-            )
-            .distinct()
+        banded = fp.select(F.col(id_col), F.col("simhash"), F.explode(bands).alias("bk")).select(
+            id_col, "simhash", "bk.band", "bk.band_key"
         )
-    else:
-        cands = (
-            banded.alias("l")
-            .join(
-                banded.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.band_key") == F.col("r.band_key"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        if candidates == "auto":
+            candidates = _auto_candidates(banded, n_bands, auto_pairs_per_doc)
+        if candidates == "star":
+            reps = banded.groupBy("band", "band_key").agg(
+                F.min(id_col).alias("id_a"),
+                F.min_by("simhash", id_col).alias("sh_a"),
             )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
-                F.col("l.simhash").alias("sh_a"),
-                F.col("r.simhash").alias("sh_b"),
+            cands = (
+                banded.join(reps, ["band", "band_key"])
+                .filter(F.col(id_col) > F.col("id_a"))
+                .select(
+                    "id_a",
+                    F.col(id_col).alias("id_b"),
+                    "sh_a",
+                    F.col("simhash").alias("sh_b"),
+                )
+                .distinct()
             )
-            .distinct()
-        )
-    try:
-        out = (
+        else:
+            cands = (
+                banded.alias("l")
+                .join(
+                    banded.alias("r"),
+                    (F.col("l.band") == F.col("r.band"))
+                    & (F.col("l.band_key") == F.col("r.band_key"))
+                    & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+                )
+                .select(
+                    F.col(f"l.{id_col}").alias("id_a"),
+                    F.col(f"r.{id_col}").alias("id_b"),
+                    F.col("l.simhash").alias("sh_a"),
+                    F.col("r.simhash").alias("sh_b"),
+                )
+                .distinct()
+            )
+        return checkpoint(
             cands.withColumn(
                 "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
             )
             .filter(F.col("hamming") <= max_hamming)
             .select("id_a", "id_b", "hamming")
         )
-        if do_ckpt:
-            out = out.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            fp.unpersist()
-    return out
 
 
 def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
@@ -880,13 +821,9 @@ def substring_dup_spans(
     # without the persist the tokenize+explode (the dominant cost — one
     # window string per token) runs twice. Measured on the giant-doc
     # corpus (tools/scale_check.py --doc-skew, 10x): 49.7 s -> 20.1 s
-    # (uniform 10x: 4.2 s -> 3.2 s). Gated like minhash's shingle persist
-    # so plan audits see the real lineage; the small span result is
+    # (uniform 10x: 4.2 s -> 3.2 s). The small span result is
     # materialised before the cache is released (the minhash pattern).
-    do_ckpt = checkpoints_enabled()
-    if do_ckpt:
-        wins = wins.persist()
-    try:
+    with cached(wins) as wins:
         dup_w = (
             wins.groupBy("w")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -913,10 +850,4 @@ def substring_dup_spans(
             )
             .select(id_col, "span_start", "span_end", "n_windows")
         )
-        if not do_ckpt:
-            return spans  # plan-audit path: full lineage, nothing cached
-        out = spans.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            wins.unpersist()
-    return out
+        return checkpoint(spans)

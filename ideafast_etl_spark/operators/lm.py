@@ -30,10 +30,13 @@ build brief mandates alongside dedup/similarity.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import norm_text
+from ..plan_audit import cached, checkpoint
 
 _FP = 1_000_000  # fixed-point grid for log-prob quantization
 
@@ -344,35 +347,32 @@ def ngram_lm_perplexity(
     and the doc-count-sized scored result is checkpointed before the
     ``occ`` cache is released (the minhash shingle-cache lifecycle). One
     gram pass, one corpus-sized shuffle, everything downstream bounded.
-    No-op under plan-audit mode: full lineage, no eager job.
+    No-op under ``plan_audit.no_checkpoints()``: full lineage, no eager
+    job.
 
     ``smoothing``: "addk" (add-k, see :func:`score_perplexity`) or "kn"
     (interpolated Kneser-Ney, see :func:`score_kn_perplexity`)."""
-    from ..plan_audit import checkpoints_enabled
-
     if smoothing not in ("addk", "kn"):
         raise ValueError(
             f"smoothing must be 'addk' or 'kn'; got {smoothing!r}"
         )
-    mat = materialize and checkpoints_enabled()
+    if materialize:
+        keep, ck = cached, checkpoint
+    else:
+        keep, ck = nullcontext, lambda d: d
     toks = _tokens(df, text_col, id_col)
     occ = (
         _grams_from_tokens(toks, n, id_col)
         .groupBy(id_col, "ctx", "w")
         .agg(F.count(F.lit(1)).alias("c_occ"))
     )
-    if mat:
-        occ = occ.persist()
-    try:
-        ngram_counts = occ.groupBy("ctx", "w").agg(
-            F.sum("c_occ").alias("c_nw")
+    with keep(occ) as occ:
+        # gram-type counts: bounded by vocabulary², in practice the
+        # distinct-gram table — small enough that every one of its four
+        # consumers should read it materialized, not re-shuffle the corpus
+        ngram_counts = ck(
+            occ.groupBy("ctx", "w").agg(F.sum("c_occ").alias("c_nw"))
         )
-        if mat:
-            # gram-type counts: bounded by vocabulary², in practice the
-            # distinct-gram table — small enough that every one of its
-            # four consumers should read it materialized, not re-shuffle
-            # the corpus
-            ngram_counts = ngram_counts.localCheckpoint(eager=True)
         context_counts = ngram_counts.groupBy("ctx").agg(
             F.sum("c_nw").alias("c_ctx")
         )
@@ -387,10 +387,4 @@ def ngram_lm_perplexity(
             result = _kn_scores(
                 occ, ngram_counts, context_counts, vocab, discount, id_col
             )
-        if not mat:
-            return result
-        out = result.localCheckpoint(eager=True)  # doc-count-sized
-    finally:
-        if mat:
-            occ.unpersist()
-    return out
+        return ck(result)  # doc-count-sized

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import checkpoint
 
 
 def waterfill_allocation(
@@ -34,7 +34,6 @@ def waterfill_allocation(
     key_col: str = "source",
     tokens_col: str = "tokens",
     max_epochs: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Allocate ``budget`` (a 1-row DataFrame with column ``budget``)
     across the rows of ``counts`` (key, tokens).
@@ -48,9 +47,8 @@ def waterfill_allocation(
     saturated-count aggregate, the level join, its uniform-fallback
     branch, and the final projection; without materialization Spark
     re-executes its window chain once per consumer. The relation is
-    bounded (sources, not documents), so ``localCheckpoint`` pins it in
-    one pass. Pass ``checkpoint=False`` only for plan audits that need
-    the un-truncated lineage (tools/explain_plans.py)."""
+    bounded (sources, not documents), so a local checkpoint pins it in
+    one pass (skipped under ``plan_audit.no_checkpoints()``)."""
     base = counts.select(
         F.col(key_col),
         F.col(tokens_col),
@@ -84,8 +82,7 @@ def waterfill_allocation(
             & (F.col("lam_i") >= F.col("cap").cast("double")),
         )
     )
-    if checkpoint and checkpoints_enabled():
-        ranked = ranked.localCheckpoint()
+    ranked = checkpoint(ranked)
     m = ranked.groupBy().agg(
         F.max(F.when(F.col("feasible"), F.col("idx"))).alias("m")
     )

@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plan_audit import cached, checkpoint, checkpoints_enabled
 from .dedup import _tokens
 
 
@@ -388,7 +389,6 @@ def mmr_rerank(
     Returns (query_id, neighbor_id, mmr_rank, relevance) with relevance
     the quantized cosine as a double.
     """
-    from ..plan_audit import checkpoints_enabled
     from .similarity import dot, unit_normalized
 
     if loop not in ("auto", "driver", "distributed"):
@@ -397,10 +397,6 @@ def mmr_rerank(
             f"got {loop!r}"
         )
     spark = df.sparkSession
-    do_ckpt = checkpoints_enabled()
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        return d.localCheckpoint(eager=True) if do_ckpt else d
     q = unit_normalized(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
         "query_id", vec_col, "query_vec",
@@ -429,10 +425,10 @@ def mmr_rerank(
         pool,
         rank_name="rn",
     ).select("query_id", "neighbor_id", "rel_fp", "rn", "vec")
-    cand = _ckpt(cand)  # bounded: queries x pool rows
+    cand = checkpoint(cand)  # bounded: queries x pool rows
     cand_rows = None
     if loop == "auto":
-        if not do_ckpt:
+        if not checkpoints_enabled():
             loop = "distributed"  # audit mode: no eager jobs, keep a plan
         else:
             # The decision "driver iff |cand| * pool <= driver_pair_limit"
@@ -474,7 +470,7 @@ def mmr_rerank(
             .cast("long").alias("sim_fp"),
         )
     )
-    pairs = _ckpt(pairs)  # bounded: queries x pool^2 rows
+    pairs = checkpoint(pairs)  # bounded: queries x pool^2 rows
     selected = (
         cand.filter(F.col("rn") == 1)
         .select(
@@ -482,7 +478,7 @@ def mmr_rerank(
             F.lit(1).alias("mmr_rank"),
         )
     )
-    selected = _ckpt(selected)
+    selected = checkpoint(selected)
     cand_slim = cand.select("query_id", "neighbor_id", "rel_fp")
     for t in range(2, k + 1):
         # NB: rename the group keys — pairs/cand/selected share attribute
@@ -534,7 +530,7 @@ def mmr_rerank(
                 F.lit(t).alias("mmr_rank"),
             )
         )
-        selected = _ckpt(selected.unionByName(winner))
+        selected = checkpoint(selected.unionByName(winner))
     return selected.select(
         "query_id", "neighbor_id",
         F.col("mmr_rank").cast("int").alias("mmr_rank"),
@@ -738,7 +734,7 @@ def _write_bm25(
         # appends land in the LIVE generation's directories — compaction
         # (compact_bm25_index) may have moved them off the flat layout
         _, dirs = _bm25_live(root)
-    # persist the term-frequency relation: dl/postings/dfreq/stats all
+    # cache the term-frequency relation: dl/postings/dfreq/stats all
     # fan out from it, and without the pin each write re-triggers the
     # explode/tokenize lineage — three corpus tokenizations per build
     tf = (
@@ -747,9 +743,8 @@ def _write_bm25(
         )
         .groupBy(id_col, "t")
         .agg(F.count("*").alias("tf"))
-        .persist()
     )
-    try:
+    with cached(tf) as tf:
         dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
         dfreq = tf.groupBy("t").agg(F.count("*").alias("df"))
         bucket = F.pmod(F.xxhash64("t"), F.lit(N_TERM_BUCKETS)).cast("int")
@@ -763,8 +758,6 @@ def _write_bm25(
         dl.agg(
             F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
         ).write.mode(mode).parquet(dirs["stats"])
-    finally:
-        tf.unpersist()
 
 
 def bm25_scores_from_index(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..operators.cleaning import line_dedup, pii_redact_col
+from ..plan_audit import checkpoint
 
 QUALITY_THRESHOLD = 0.6
 
@@ -42,26 +43,18 @@ def corpus_prep(
     corpus (doc_id, text) after the final dedup rung, and the per-stage
     (stage, n_docs, n_tokens) accounting. The streaming twin
     (streaming/corpus.py) publishes both as snapshots per drain."""
-    from ..plan_audit import checkpoints_enabled
-
-    do_ckpt = checkpoints_enabled()
-
-    def _ck(d: DataFrame) -> DataFrame:
-        # each stage feeds BOTH its report aggregate and the next stage
-        # (and d4 feeds the returned corpus): without the checkpoint the
-        # report's five union branches re-execute the cumulative chain —
-        # O(stages^2) full-corpus work, and the 100x giant-doc sweep's
-        # timeout. Gated so plan audits explain the real lineage.
-        return d.localCheckpoint(eager=True) if do_ckpt else d
-
+    # each stage feeds BOTH its report aggregate and the next stage (and
+    # d4 feeds the returned corpus): without the checkpoint the report's
+    # five union branches re-execute the cumulative chain — O(stages^2)
+    # full-corpus work, and the 100x giant-doc sweep's timeout.
     s0 = _stage("0_raw", docs.select(F.col(text_col).alias("text")))
-    d1 = _ck(
+    d1 = checkpoint(
         line_dedup(docs, text_col, with_text=True).select("doc_id", "text")
     )
     s1 = _stage("1_line_dedup", d1)
-    d2 = _ck(d1.filter(T.quality_score(F.col("text")) >= QUALITY_THRESHOLD))
+    d2 = checkpoint(d1.filter(T.quality_score(F.col("text")) >= QUALITY_THRESHOLD))
     s2 = _stage("2_quality", d2)
-    d3 = _ck(d2.select("doc_id", pii_redact_col(F.col("text")).alias("text")))
+    d3 = checkpoint(d2.select("doc_id", pii_redact_col(F.col("text")).alias("text")))
     s3 = _stage("3_pii_redacted", d3)
     # exact dedup keyed on sha256(normalized text) with a min_by hash
     # aggregate — the line_dedup posture, for the same two reasons: a
@@ -74,7 +67,7 @@ def corpus_prep(
     # collision guard — a colliding pair of DIFFERENT texts would have to
     # collide at equal length too to be merged (r9 ADVICE).
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    d4 = _ck(
+    d4 = checkpoint(
         d3.groupBy(
             F.sha2(norm, 256).alias("__k"), F.length(norm).alias("__len")
         )

@@ -33,7 +33,7 @@ def spark():
 # ---------------------------------------------------------------------------
 
 # whole files: themed heavy suites — crash matrices, compaction protocols,
-# e2e pipelines, streaming twins, same-process A/B parity harnesses
+# e2e pipelines, streaming twins, posture parity suites
 SLOW_FILES = {
     "test_store_crash_recovery.py",   # 109 s: crash matrix
     "test_accum_compaction.py",       # 135 s: compaction + crash protocol
@@ -45,7 +45,6 @@ SLOW_FILES = {
     "test_monitoring_streaming.py",   # 54 s: streaming monitors
     "test_corpus_streaming.py",       # 28 s: streaming corpus twins
     "test_state_delta.py",            # 56 s: delta-publish protocol
-    "test_loop_jobshave.py",          # 38 s: r12 A/B parity harnesses
     "test_auto_postures.py",          # 57 s: dup-dense posture parity
 }
 
@@ -54,7 +53,6 @@ SLOW_FILES = {
 # in the default profile
 SLOW_TESTS = {
     "test_cdc_changes.py::test_incremental_view_maintenance_from_cdc",
-    "test_classifier.py::test_train_and_score_matches_composed",
     "test_clustering.py::test_hierarchical_kmeans_planted_dups_and_determinism",
     "test_clustering.py::test_hierarchical_small_corpus_falls_back_to_flat",
     "test_clustering.py::test_semantic_dedup_cap_keeps_lowest_id_semantics",
@@ -79,6 +77,14 @@ SLOW_TESTS = {
     "test_ivfpq.py::test_ivfpq_recall_vs_brute_force",
     "test_jpeg.py::test_progressive_through_spark_decode_path",
     "test_lm.py::test_fused_equals_composed_addk_and_kn",
+    "test_loop_jobshave.py::test_minhash_cached_matches_lazy[all]",
+    "test_loop_jobshave.py::test_simhash_cached_matches_lazy",
+    "test_loop_jobshave.py::test_grid_star_cached_matches_lazy",
+    "test_loop_jobshave.py::test_kmeans_and_pq_trainers_cached_match_lazy",
+    "test_loop_jobshave.py::test_ivfpq_hotsplit_cached_matches_lazy",
+    "test_loop_jobshave.py::test_classifier_cached_matches_lazy",
+    "test_loop_jobshave.py::test_cc_labels_are_component_minimum",
+    "test_loop_jobshave.py::test_cc_output_schema_drops_change_flag",
     "test_metrics_and_fetch.py::test_distributed_fetch_skips_unavailable",
     "test_multi_device.py::test_two_device_types_share_state_without_interference",
     "test_mview_stats.py::test_state_is_mergeable",

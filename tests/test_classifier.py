@@ -84,15 +84,16 @@ def test_quality_labels_threshold(spark):
 
 
 def test_train_and_score_matches_composed(spark, corpus):
-    """r13: the fused train+score operator (feats persisted across the
-    training join and the scoring pass, doc count folded into the first
-    gradient job) must return exactly what the composed form returns."""
+    """The fused train+score operator (one cache across the training
+    join and the scoring pass, doc count folded into the first gradient
+    job) must return exactly what the composed form returns — on a small
+    corpus so the check stays in the fast profile."""
     from ideafast_etl_spark.operators.classifier import train_and_score_logreg
 
-    df = spark.createDataFrame(corpus, ["doc_id", "text", "label"])
+    df = spark.createDataFrame(corpus[:12], ["doc_id", "text", "label"])
     feats = doc_features(df, dim=DIM)
     labels = df.select("doc_id", "label")
-    w = train_logreg(feats, labels, dim=DIM, iters=5)
+    w = train_logreg(feats, labels, dim=DIM, iters=3)
     composed = {
         (r.doc_id, r.prob, r.predicted)
         for r in score_logreg(feats, w).collect()
@@ -100,10 +101,42 @@ def test_train_and_score_matches_composed(spark, corpus):
     fused = {
         (r.doc_id, r.prob, r.predicted)
         for r in train_and_score_logreg(
-            feats, labels, dim=DIM, iters=5
+            feats, labels, dim=DIM, iters=3
         ).collect()
     }
     assert fused == composed
+
+
+def test_train_and_score_returns_labelled_docs_only(spark, corpus):
+    """With labels for half the docs, train_and_score_logreg scores
+    exactly the labelled population — by default and inside
+    no_checkpoints(), where the audited plan is built."""
+    from ideafast_etl_spark.operators.classifier import train_and_score_logreg
+    from ideafast_etl_spark.plan_audit import no_checkpoints
+
+    df = spark.createDataFrame(corpus[:12], ["doc_id", "text", "label"])
+    feats = doc_features(df, dim=DIM)
+    labels = df.filter("doc_id % 2 = 0").select("doc_id", "label")
+    want = list(range(0, 12, 2))
+
+    def scored_ids():
+        out = train_and_score_logreg(feats, labels, dim=DIM, iters=2)
+        return sorted(r.doc_id for r in out.collect())
+
+    assert scored_ids() == want
+    with no_checkpoints():
+        assert scored_ids() == want
+
+
+def test_missing_bias_row_raises(spark, corpus):
+    """A feats relation without the idx == dim bias entry must fail loudly
+    instead of training on n = 0 into all-zero weights."""
+    df = spark.createDataFrame(corpus[:6], ["doc_id", "text", "label"])
+    no_bias = doc_features(df, dim=DIM).select(
+        "doc_id", F.filter("feats", lambda s: s["idx"] < DIM).alias("feats")
+    )
+    with pytest.raises(ValueError, match="bias"):
+        train_logreg(no_bias, df.select("doc_id", "label"), dim=DIM, iters=2)
 
 
 def test_empty_labels(spark):

@@ -1,56 +1,145 @@
-"""r12 loop job-shaves are value-free: the lazy BPE merge checkpoint and
-the fused CC convergence check must produce bit-identical results to the
-eager/joined forms they replace (REPRO.md same-values discipline; the
-speed evidence lives in tools/ab_jobshave.py + OPTIMIZATION_r12.md)."""
+"""Caches and checkpoints are value-free: every operator that routes a
+materialization through ``plan_audit.cached``/``plan_audit.checkpoint``
+must return the same rows by default as inside ``no_checkpoints()``,
+where both helpers are no-ops and the full lazy lineage runs (REPRO.md
+same-values discipline). Fixtures stay tiny because the lazy form
+recomputes lineage per loop iteration."""
+
+import random
 
 import pytest
 
-from ideafast_etl_spark.operators import dedup, similarity, tokenizer
+from pyspark.sql import functions as F
+
+from ideafast_etl_spark.operators import (
+    classifier,
+    clustering,
+    dedup,
+    ivfpq,
+    pq,
+    similarity,
+)
+from ideafast_etl_spark.plan_audit import no_checkpoints
 
 
-@pytest.fixture()
-def _restore_flags():
-    bpe_flag = tokenizer._EAGER_MERGE_CKPT
-    cc_flag = dedup._FUSED_CC_CHANGE
-    star_flag = similarity._PERSIST_STAR_REPS
-    perdoc_flag = dedup._PERSIST_PER_DOC
-    fp_flag = dedup._PERSIST_SIMHASH_FP
-    yield
-    tokenizer._EAGER_MERGE_CKPT = bpe_flag
-    dedup._FUSED_CC_CHANGE = cc_flag
-    similarity._PERSIST_STAR_REPS = star_flag
-    dedup._PERSIST_PER_DOC = perdoc_flag
-    dedup._PERSIST_SIMHASH_FP = fp_flag
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
-def test_bpe_lazy_merge_ckpt_matches_eager(spark, _restore_flags):
-    """Checkpoint eagerness must not change what bpe_train learns: the
-    lazy vocab checkpoint (materialized by the next merge's top-pair
-    collect) yields the same merge list and the same final symbolized
-    vocabulary as the eager 2-jobs-per-merge form."""
-    rows = [
-        (i, f"low lower lowest newest widest new wid{i % 3} er est")
-        for i in range(12)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {}
-    for eager in (True, False):
-        tokenizer._EAGER_MERGE_CKPT = eager
-        merges, vocab = tokenizer.bpe_train(docs, n_merges=8)
-        out[eager] = (
-            merges,
-            sorted(map(tuple, vocab.select("word", "freq", "sym").collect())),
+def _parity(build):
+    """(default rows, no_checkpoints rows) of the DataFrame ``build()``
+    returns; the lazy result is collected inside the context."""
+    cached = _rows(build())
+    with no_checkpoints():
+        lazy = _rows(build())
+    return cached, lazy
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    rows = [(i, f"the quick brown fox jumps over lazy dog {i % 4}")
+            for i in range(16)]
+    rows += [(100 + i, f"completely different text body num{i} tok{i} "
+                       f"it{i} th{i} ex{i} mo{i}") for i in range(6)]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+@pytest.fixture(scope="module")
+def vecs(spark):
+    """A planted near-identical cluster (ids 0-11) plus spread vectors."""
+    rnd = random.Random(7)
+    base = [rnd.uniform(-1, 1) for _ in range(8)]
+    rows = [(i, [v + rnd.uniform(-1e-4, 1e-4) for v in base])
+            for i in range(12)]
+    rows += [(100 + i, [rnd.uniform(-1, 1) for _ in range(8)])
+             for i in range(20)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("candidates", ["all", "star"])
+def test_minhash_cached_matches_lazy(docs, candidates):
+    """The shingle and per-doc signature caches of
+    minhash_near_dup_pairs (both candidate postures)."""
+    cached, lazy = _parity(lambda: dedup.minhash_near_dup_pairs(
+        docs, threshold=0.3, candidates=candidates))
+    assert cached == lazy
+    assert len(cached) > 0
+
+
+def test_simhash_cached_matches_lazy(docs):
+    """The fingerprint-relation cache of simhash_near_dup_pairs."""
+    cached, lazy = _parity(
+        lambda: dedup.simhash_near_dup_pairs(docs, max_hamming=3))
+    assert cached == lazy
+    assert len(cached) > 0
+
+
+def test_grid_star_cached_matches_lazy(vecs):
+    """The grid-star representative cache: the planted cluster exercises
+    the intra leg, the spread vectors the cross leg."""
+    cached, lazy = _parity(lambda: similarity.grid_near_dup_pairs(
+        vecs, threshold=0.95, candidates="star"))
+    assert cached == lazy
+    assert len(cached) >= 11  # the planted cluster's intra pairs exist
+
+
+def test_kmeans_and_pq_trainers_cached_match_lazy(vecs):
+    """The trainers' point caches (kmeans_fit, pq_train): same
+    assignment, same centroids, same codebooks."""
+    def fit():
+        assign, cent = clustering.kmeans_fit(vecs, k=3, iters=1)
+        return assign.unionByName(
+            cent.selectExpr("cid AS vec_id", "pos AS cluster_id",
+                            "CAST(icval AS double) AS sim")
         )
-    assert out[True] == out[False]
-    assert len(out[True][0]) > 0  # the fixture actually trains merges
+
+    cached, lazy = _parity(fit)
+    assert cached == lazy
+    cached, lazy = _parity(lambda: pq.pq_train(vecs, m=2, k=4, iters=1))
+    assert cached == lazy
 
 
-def test_cc_fused_change_check_matches_join_check(spark, _restore_flags):
-    """Min-label propagation is monotone non-increasing, so the fused
-    in-projection change flag (neighbour_min < old) decides convergence
-    exactly like the old labels⋈new_labels inequality join — same
-    clusters, same labels, on a fixture whose pair graph takes multiple
-    propagation rounds (a template cluster plus satellite dups)."""
+def test_ivfpq_hotsplit_cached_matches_lazy(vecs):
+    """The hot-member cache of the IVF-PQ hot-cell split, with a cap
+    small enough that the planted cluster's cell splits: same member
+    assignment, same sub-centroids."""
+    from pyspark.sql import functions as F
+
+    assign, coarse = clustering.kmeans_fit(vecs, k=3, iters=1)
+    cells = assign.select(
+        F.col("vec_id").alias("__id"), F.col("cluster_id").alias("cell")
+    )
+    pts = clustering._pos_exploded(vecs, "vec_id", "embedding")
+
+    def split():
+        cells2, fcent = ivfpq._split_hot_cells(
+            pts, cells, coarse, max_cell_size=4, split_iters=1
+        )
+        return cells2.selectExpr("__id", "cell", "sub", "0 AS pos").unionByName(
+            fcent.selectExpr("icval AS __id", "cell", "sub", "pos")
+        )
+
+    cached, lazy = _parity(split)
+    assert cached == lazy
+    assert max(r[2] for r in cached) > 0  # a hot cell actually split
+
+
+def test_classifier_cached_matches_lazy(docs):
+    """train_and_score_logreg's single training cache."""
+    feats = classifier.doc_features(docs, dim=16)
+    labels = docs.selectExpr("doc_id", "CAST(doc_id < 100 AS int) AS label")
+    cached, lazy = _parity(lambda: classifier.train_and_score_logreg(
+        feats, labels, dim=16, iters=2))
+    assert cached == lazy
+    assert len(cached) == 22
+
+
+def test_cc_labels_are_component_minimum(spark):
+    """Min-label propagation with the in-projection change flag
+    (labels are monotone, so new != old iff neighbour_min < old) on a
+    fixture whose pair graph takes multiple rounds — a template cluster
+    plus satellite dups: every template doc resolves to min id 0, in
+    both candidate postures."""
     template = " ".join(f"w{i}" for i in range(40))
     rows = [(i, f"{template} u{i}a u{i}b") for i in range(24)]
     rows += [
@@ -59,92 +148,20 @@ def test_cc_fused_change_check_matches_join_check(spark, _restore_flags):
         for i in range(6)
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {}
-    for fused in (False, True):
-        dedup._FUSED_CC_CHANGE = fused
-        for mode in ("all", "star"):
-            got[(fused, mode)] = sorted(
-                map(
-                    tuple,
-                    dedup.near_dup_clusters(
-                        docs, threshold=0.5, candidates=mode
-                    ).collect(),
-                )
-            )
-    assert got[(False, "all")] == got[(True, "all")]
-    assert got[(False, "star")] == got[(True, "star")]
-    # the fixture is non-trivial: the template cluster resolved to min id 0
-    assert [p for p in got[(True, "all")] if p[0] < 200] == [
+    got = {
+        mode: _rows(dedup.near_dup_clusters(
+            docs, threshold=0.5, candidates=mode))
+        for mode in ("all", "star")
+    }
+    assert got["all"] == got["star"]
+    assert [p for p in got["all"] if p[0] < 200] == [
         (i, 0) for i in range(24)
     ]
 
 
-def test_grid_star_reps_persist_matches_uncached(spark, _restore_flags):
-    """Caching the grid-star representative relation across its three
-    consumers must not change the verified pair set — on a corpus with a
-    planted near-identical cluster (exercising the intra leg) plus spread
-    vectors (exercising the cross leg)."""
-    import random
-
-    rnd = random.Random(7)
-    rows = []
-    base = [rnd.uniform(-1, 1) for _ in range(8)]
-    for i in range(12):  # jitter cluster: collapses into fine groups
-        rows.append((i, [v + rnd.uniform(-1e-4, 1e-4) for v in base]))
-    for i in range(40):  # spread vectors for the representative stage
-        rows.append((100 + i, [rnd.uniform(-1, 1) for _ in range(8)]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {}
-    for cached in (False, True):
-        similarity._PERSIST_STAR_REPS = cached
-        got[cached] = sorted(
-            map(
-                tuple,
-                similarity.grid_near_dup_pairs(
-                    df, threshold=0.95, candidates="star"
-                ).collect(),
-            )
-        )
-    assert got[False] == got[True]
-    assert len(got[True]) >= 11  # the planted cluster's intra pairs exist
-
-
-def test_minhash_perdoc_and_simhash_fp_persist_match_uncached(
-    spark, _restore_flags
-):
-    """Persisting the doc-keyed signature aggregate (minhash) / the
-    fingerprint relation (simhash) across their consumers must not change
-    the verified pair sets."""
-    rows = [(i, f"the quick brown fox jumps over lazy dog {i % 4}")
-            for i in range(16)]
-    rows += [(100 + i, f"completely different text body num{i} tok{i} "
-                       f"it{i} th{i} ex{i} mo{i}") for i in range(6)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {}
-    for cached in (False, True):
-        dedup._PERSIST_PER_DOC = cached
-        dedup._PERSIST_SIMHASH_FP = cached
-        got[("mh", cached)] = sorted(
-            map(tuple, dedup.minhash_near_dup_pairs(
-                docs, threshold=0.3).collect())
-        )
-        got[("mh_star", cached)] = sorted(
-            map(tuple, dedup.minhash_near_dup_pairs(
-                docs, threshold=0.3, candidates="star").collect())
-        )
-        got[("sh", cached)] = sorted(
-            map(tuple, dedup.simhash_near_dup_pairs(
-                docs, max_hamming=3).collect())
-        )
-    for key in ("mh", "mh_star", "sh"):
-        assert got[(key, False)] == got[(key, True)], key
-    assert len(got[("mh", True)]) > 0
-
-
-def test_cc_output_schema_drops_change_flag(spark, _restore_flags):
-    """The fused path's internal __chg column must never leak into the
-    operator's output schema."""
-    dedup._FUSED_CC_CHANGE = True
+def test_cc_output_schema_drops_change_flag(spark):
+    """The internal __chg column must never leak into the operator's
+    output schema."""
     rows = [(1, "a b c d e f g h"), (2, "a b c d e f g h"), (3, "z y x w v u t s")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     out = dedup.near_dup_clusters(docs, threshold=0.5)

@@ -399,9 +399,9 @@ def main() -> int:
             "below are therefore built under `plan_audit.no_checkpoints()`, which\n"
             "makes lineage-truncating operators (minhash_near_dup_pairs,\n"
             "bfs_hops, waterfill_allocation) return their full lazy lineage. Any\n"
-            "NEW operator that calls localCheckpoint/persist before returning\n"
-            "must honor `plan_audit.checkpoints_enabled()` the same way, or its\n"
-            "audit here silently asserts nothing.\n\n"
+            "NEW operator that caches or checkpoints before returning must do so\n"
+            "through `plan_audit.cached`/`plan_audit.checkpoint`, or its audit\n"
+            "here silently asserts nothing.\n\n"
             + "\n".join(sections)
         )
     print(f"\n{len(failures)} plan audits failed" + (f": {failures}" if failures else ""))
