@@ -241,8 +241,8 @@ class DreemPipeline:
         """Streaming-ingest variant of a scheduled run: drain all available
         feed files through the checkpointed Structured-Streaming path
         (availableNow + foreachBatch MERGE), then run the resolution stages
-        over the refreshed state — the reference's poll-then-process cycle
-        with exactly-once file consumption."""
+        and run-end maintenance over the refreshed state — the reference's
+        poll-then-process cycle with exactly-once file consumption."""
         from ..streaming.incremental import run_streaming_ingest
 
         batch_counts: list[int] = []
@@ -258,11 +258,7 @@ class DreemPipeline:
         q.awaitTermination()
         return {
             "ingested": sum(batch_counts),
-            "serials": self.resolve_serial(uid_map),
-            "devices": self.resolve_device_id(serial_map),
-            "patients": self.resolve_patient(assignments),
-            "grouped": self.group_records(),
-            "uploaded": self.upload(),
+            **self._after_ingest(uid_map, serial_map, assignments),
         }
 
     def run_stream_full_dag(
@@ -275,9 +271,9 @@ class DreemPipeline:
         checkpoint_dir: str | None = None,
     ) -> list[dict]:
         """The WHOLE DAG — ingest → resolutions → grouping → upload — under
-        Structured Streaming: every micro-batch runs all six stages inside
-        ``foreachBatch`` (the reference's poll cycle is end-to-end per poll,
-        dags/dreem.py:209-217 / :299-307).
+        Structured Streaming: every micro-batch runs all six stages and the
+        run-end maintenance inside ``foreachBatch`` (the reference's poll
+        cycle is end-to-end per poll, dags/dreem.py:209-217 / :299-307).
 
         Delivery semantics across restarts: file consumption is exactly-once
         (checkpoint), inserts are idempotent (hash anti-join), and upload is
@@ -292,13 +288,7 @@ class DreemPipeline:
         work every poll cycle even when the feed is quiet."""
 
         def _stages() -> dict:
-            return {
-                "serials": self.resolve_serial(uid_map),
-                "devices": self.resolve_device_id(serial_map),
-                "patients": self.resolve_patient(assignments),
-                "grouped": self.group_records(),
-                "uploaded": self.upload(),
-            }
+            return self._after_ingest(uid_map, serial_map, assignments)
 
         reports: list[dict] = []
 
@@ -359,6 +349,16 @@ class DreemPipeline:
         run-end small-file maintenance keeps scans fast across many runs."""
         return {
             "ingested": self.ingest(raw_api_rows),
+            **self._after_ingest(uid_map, serial_map, assignments),
+        }
+
+    def _after_ingest(
+        self, uid_map: DataFrame, serial_map: DataFrame, assignments: DataFrame
+    ) -> dict[str, int | tuple[int, int, int]]:
+        """Every stage after ingest, in reference task order, ending in
+        run-end maintenance — shared by the batch run and both streaming
+        entry points, so a streaming poller compacts like a batch one."""
+        return {
             "serials": self.resolve_serial(uid_map),
             "devices": self.resolve_device_id(serial_map),
             "patients": self.resolve_patient(assignments),

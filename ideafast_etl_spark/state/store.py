@@ -37,19 +37,18 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from collections.abc import Callable, Collection
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .manifest import (
-    latest_manifest,
     manifest_path,
     put_manifest,
     read_manifest,
 )
 
-_POINTER = "_CURRENT"  # legacy layout: pre-manifest stores only
 _META = "_meta"
 
 
@@ -61,8 +60,8 @@ class StateStore:
     same create/delete-only discipline the BM25/IVF indexes and the
     streaming accumulations use, so the store holds on object storage
     where directory rename is neither atomic nor guaranteed to exist.
-    Stores written by the previous layout (``_CURRENT`` pointer file)
-    are read via a legacy fallback and migrate on their next write."""
+    Every transition builds its relational plan and names the partitions
+    it rewrites; ``_publish`` is the one step that writes and commits."""
 
     def __init__(
         self,
@@ -110,17 +109,15 @@ class StateStore:
 
     # -- snapshot mechanics ---------------------------------------------------
 
-    def _pointer_file(self) -> str:
-        return os.path.join(self.path, _POINTER)
-
     def _meta_dir(self) -> str:
         return os.path.join(self.path, _META)
 
-    def _committed_versions(self) -> list[str]:
-        """Versions with a valid manifest (parses + self-checksums) whose
-        snapshot dir exists, ascending. A manifest truncated by a crashed
-        PUT fails the checksum and is ignored; a data dir without a
-        manifest is an uncommitted crash remnant and is ignored."""
+    def versions(self) -> list[str]:
+        """Committed snapshot versions, oldest first (monotone time_ns
+        stamps): a valid manifest (parses + self-checksums) whose snapshot
+        dir exists. A manifest truncated by a crashed PUT fails the
+        checksum and is ignored; a data dir without a manifest is an
+        uncommitted crash remnant and is never listed."""
         if not os.path.isdir(self._meta_dir()):
             return []
         out = []
@@ -134,50 +131,14 @@ class StateStore:
         return sorted(out, key=int)
 
     def current_version(self) -> str | None:
-        vs = self._committed_versions()
-        if vs:
-            return vs[-1]
-        # legacy pre-manifest layout: resolve through the pointer file
-        try:
-            with open(self._pointer_file()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        vs = self.versions()
+        return vs[-1] if vs else None
 
     def _snapshot_dir(self, version: str) -> str:
         return os.path.join(self.path, f"v_{version}")
 
     def exists(self) -> bool:
         return self.current_version() is not None
-
-    def versions(self) -> list[str]:
-        """Retained snapshot versions, oldest first (monotone timestamps) —
-        COMMITTED versions only (manifest-resolved); an uncommitted data
-        dir left by a crash is never listed. Legacy pointer-file stores
-        fall back to the directory listing."""
-        vs = self._committed_versions()
-        if vs or not os.path.exists(self._pointer_file()):
-            return vs
-        # Orphan guard on the pointer-era fallback (r11 advice): versions
-        # are monotone time_ns stamps, so a dir NEWER than the pointer is
-        # a staged-but-uncommitted snapshot (a crash between the data
-        # write and the store's first manifest PUT) — it must not be
-        # listed, served by read(version=...), or protected from
-        # recover(). Only dirs the pointer (or an older commit) reached
-        # are real.
-        cur = self.current_version()
-        if cur is None:
-            return []
-        out = []
-        for d in os.listdir(self.path):
-            if not d.startswith("v_"):
-                continue
-            try:
-                if int(d[2:]) <= int(cur):
-                    out.append(d[2:])
-            except ValueError:
-                continue
-        return sorted(out, key=int)
 
     def read(self, version: str | None = None) -> DataFrame:
         """Read the current snapshot, or a retained historical one.
@@ -199,35 +160,14 @@ class StateStore:
             self._snapshot_dir(version)
         )
 
-    def _write_snapshot(self, df: DataFrame) -> None:
-        version = f"{time.time_ns()}"
-        out = self._staging_dir(version)
-        if df.isEmpty():
-            # a partitionBy write of an empty frame emits NO files (no schema
-            # footer) and the snapshot becomes unreadable; write one empty
-            # schema-bearing part file instead
-            df.repartition(1).write.mode("overwrite").parquet(out)
-        else:
-            writer = df.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(out)
-        # data staged in its final dir (unreferenced) + manifest PUT:
-        # readers see old or new, never partial, even across a crash
-        self._commit(version, out)
-
     def _gc(self, keep: tuple[str, ...]) -> None:
         """Delete-only retention: committed snapshots beyond the pinned
         set and the keep_versions window lose their data dir AND their
         manifest file; manifests that fail to parse (truncated PUTs) or
-        whose data dir is gone are unlinked; legacy staging dirs are
-        cleared. Never touches an uncommitted data dir — recover() owns
-        crash-remnant removal (GC may run while a legacy store has
-        pointer-era dirs that the fallback versions() still lists)."""
-        current = self.current_version()
-        committed = self._committed_versions()
-        keep_set = set(keep) | ({current} if current else set())
-        keep_set |= set(committed[-self.keep_versions:])
+        whose data dir is gone are unlinked. Never touches an uncommitted
+        data dir — recover() owns crash-remnant removal."""
+        committed = self.versions()
+        keep_set = set(keep) | set(committed[-self.keep_versions:])
         for v in committed:
             if v in keep_set:
                 continue
@@ -236,91 +176,124 @@ class StateStore:
                 os.unlink(manifest_path(self._meta_dir(), int(v)))
             except OSError:
                 pass
-        if os.path.isdir(self._meta_dir()):
-            for e in os.scandir(self._meta_dir()):
-                got = read_manifest(e.path) if e.is_file() else None
-                if got is None or not os.path.isdir(
-                    self._snapshot_dir(str(got[1].get("version", "")))
-                ):
-                    try:
-                        os.unlink(e.path)
-                    except OSError:
-                        pass
-        # legacy-layout staging dirs orphaned by a pre-migration crash
-        for d in os.listdir(self.path):
-            if d.startswith("_tmp_v_"):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        for e in os.scandir(self._meta_dir()):
+            got = read_manifest(e.path) if e.is_file() else None
+            if got is None or not os.path.isdir(
+                self._snapshot_dir(str(got[1].get("version", "")))
+            ):
+                try:
+                    os.unlink(e.path)
+                except OSError:
+                    pass
 
     def _commit_manifest(self, version: str) -> None:
         """THE commit point: one manifest PUT (no rename anywhere). The
         manifest id is the integer version itself — versions are monotone
-        time_ns stamps, so the highest-id manifest IS the newest commit.
-        A legacy pointer file is retired on the first manifest commit."""
+        time_ns stamps, so the highest-id manifest IS the newest commit."""
         prev = self.current_version()
         put_manifest(self._meta_dir(), int(version), {"version": version})
-        try:
-            os.unlink(self._pointer_file())
-        except OSError:
-            pass
         # grace window: the just-superseded snapshot survives this commit so
         # in-flight readers of the old version don't lose files mid-scan
         self._gc(keep=(version, prev) if prev else (version,))
 
-    def _link_other_partitions(self, out: str, partition_value: str) -> None:
-        """Hardlink every partition EXCEPT ``partition_value`` from the
-        current snapshot into ``out`` — the selective-rewrite half of an
-        O(affected partition) merge. At 100 TB a stage that touches one
-        device_type must not rewrite the other ten."""
-        assert len(self.partition_by) == 1
+    def _scope(
+        self, values: Collection[str] | None
+    ) -> tuple[DataFrame, frozenset[str] | None]:
+        """The current snapshot restricted to the partitions ``values`` of
+        the single partition column, and the partition dirs a rewrite of it
+        replaces. ``None`` (or a store not partitioned by exactly one
+        column) scopes the whole table: a full rewrite."""
+        state = self.read()
+        if values is None or len(self.partition_by) != 1:
+            return state, None
         pcol = self.partition_by[0]
-        old_dir = self._snapshot_dir(self.current_version())
-        skip = f"{pcol}={partition_value}"
-        for entry in os.listdir(old_dir):
-            src = os.path.join(old_dir, entry)
-            if not os.path.isdir(src) or entry == skip or not entry.startswith(f"{pcol}="):
-                continue
-            self._link_tree(src, os.path.join(out, entry))
+        return (
+            state.filter(F.col(pcol).isin(*values)),
+            frozenset(f"{pcol}={v}" for v in values),
+        )
 
-    def _staging_dir(self, version: str) -> str:
-        """The next snapshot's data dir IS its final ``v_<version>`` dir:
-        unreferenced by any manifest, it is invisible to ``versions()`` /
-        ``read()`` / GC retention until ``_commit`` PUTs the manifest —
-        the object-store staging discipline (no rename exists there)."""
-        return self._snapshot_dir(version)
+    def _publish(
+        self,
+        plan: DataFrame,
+        rewrites: frozenset[str] | None,
+        *metrics: Column,
+        accept: Callable[[dict[str, int]], bool] | None = None,
+        drop: Collection[str] = (),
+        log: bool = False,
+    ) -> dict[str, int]:
+        """The one write path: every transition commits a new snapshot here.
 
-    def _write_uncommitted(self, df: DataFrame) -> tuple[str, str]:
-        """Write ``df`` as the next snapshot's data files WITHOUT
-        committing. The files land in the final ``v_<version>`` dir but no
-        manifest references it — invisible to ``versions()`` /
-        ``read(version)`` and to GC retention accounting — so a crash
-        between write and commit can never expose a partial snapshot or
-        eat a retention slot. Callers inspect their Observation after this
-        action and either ``_commit`` (manifest PUT) or ``_discard``
-        (no-op run — the state is unchanged, so no version is published)."""
+        1. ``recover()`` a crashed predecessor (before anything is staged,
+           so its CDC entry is judged against the version it committed);
+        2. write ``plan`` into the unreferenced next ``v_<version>`` dir,
+           with one Observation at the root of the written plan (where its
+           metrics survive AQE empty-relation pruning) collecting
+           ``metrics`` plus ``rows`` (rows written) — no separate count
+           job; the ``drop`` columns are metric inputs, removed after the
+           observe and never written;
+        3. ``accept(metrics)``: False discards the written dir (a no-op
+           publishes no version); an exception discards it and propagates;
+        4. with ``log``, stage the CDC entry — the dir holds exactly the
+           new part-files at this point;
+        5. hardlink every current partition outside ``rewrites`` (the
+           top-level partition dirs the plan replaces): an empty set links
+           everything (append), ``None`` links nothing (full rewrite);
+        6. one manifest PUT — the commit point;
+        7. publish the staged CDC entry.
+
+        Returns the observed metrics."""
+        self.recover()
+        base = self.current_version()
         version = f"{time.time_ns()}"
-        out = self._staging_dir(version)
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(out)
+        out = self._snapshot_dir(version)
+        obs = Observation()
+        written = plan.observe(
+            obs, F.count(F.lit(1)).alias("rows"), *metrics
+        ).drop(*drop)
+
+        def write(df: DataFrame, partition_by: tuple[str, ...]) -> None:
+            df.write.mode("overwrite").partitionBy(*partition_by).parquet(out)
+
+        write(written, self.partition_by)
         os.makedirs(out, exist_ok=True)  # all-empty partitioned write emits nothing
-        return version, out
-
-    def _commit(self, version: str, out: str) -> None:
-        """Publish a staged snapshot: one manifest PUT (rename-free)."""
+        m = {k: int(v) for k, v in obs.get.items()}
+        keep = False
+        try:
+            keep = accept is None or accept(m)
+        finally:
+            if not keep:
+                shutil.rmtree(out, ignore_errors=True)
+        if not keep:
+            return m
+        if log:
+            self._log_append(out, version)
+        linked = 0
+        if base is not None and rewrites is not None:
+            linked = self._link_tree(self._snapshot_dir(base), out, rewrites)
+        if m["rows"] == 0 and not linked:
+            # an empty snapshot has no part-file to carry its schema and
+            # would be unreadable: write one empty schema-bearing file
+            write(self.spark.createDataFrame([], written.schema).repartition(1), ())
         self._commit_manifest(version)
+        if log:
+            self._finalize_log(version)
+        return m
 
-    def _discard(self, out: str) -> None:
-        shutil.rmtree(out, ignore_errors=True)
-
-    def _link_tree(self, src_dir: str, out_dir: str) -> None:
+    def _link_tree(
+        self, src_dir: str, out_dir: str, skip: Collection[str] = ()
+    ) -> int:
         """Hardlink every data file under ``src_dir`` into ``out_dir``,
-        preserving the partition-directory layout. Spark part-file names
-        embed a job UUID, so links from an old snapshot never collide with
-        files a fresh write just produced; if one ever did, fall back to a
-        version-prefixed name rather than fail the commit."""
-        for root, _dirs, files in os.walk(src_dir):
+        preserving the partition-directory layout, except under the
+        top-level dirs named in ``skip``; returns the number linked. Spark
+        part-file names embed a job UUID, so links from an old snapshot
+        never collide with files a fresh write just produced; if one ever
+        did, fall back to a version-prefixed name rather than fail the
+        commit."""
+        n = 0
+        for root, dirs, files in os.walk(src_dir):
             rel = os.path.relpath(root, src_dir)
+            if rel == ".":
+                dirs[:] = [d for d in dirs if d not in skip]
             dst_dir = out_dir if rel == "." else os.path.join(out_dir, rel)
             made = False
             for fn in files:
@@ -333,31 +306,7 @@ class StateStore:
                 if os.path.exists(dst):
                     dst = os.path.join(dst_dir, f"linked-{fn}")
                 os.link(os.path.join(root, fn), dst)
-
-    def _append_files(self, fresh: DataFrame) -> int:
-        """O(delta) insert: write ONLY the new rows as part-files into the
-        next snapshot and hardlink every current file alongside them —
-        snapshot = old files + delta files, the manifest being the directory
-        tree itself. At 100 TB an ingest of a few thousand rows costs a few
-        part-files, never a table rewrite (reference contract: per-document
-        inserts, db.py:88-96). Returns rows inserted (observed on the write
-        itself — no separate count job); an empty delta publishes nothing."""
-        old_dir = self._snapshot_dir(self.current_version())
-        obs = Observation()
-        version, out = self._write_uncommitted(
-            fresh.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n = int(obs.get["n"])
-        if n == 0:
-            self._discard(out)
-            return 0
-        # CDC capture BEFORE old files link in: ``out`` holds exactly the
-        # delta part-files at this point, so the change log costs hardlinks
-        # only — no second write job, no diff job
-        self._log_append(out, version)
-        self._link_tree(old_dir, out)
-        self._commit(version, out)
-        self._finalize_log(version)
+                n += 1
         return n
 
     # -- append change log (streaming CDC source) -----------------------------
@@ -376,7 +325,8 @@ class StateStore:
         before the snapshot commit can never publish phantom CDC rows for
         a version that was never committed. ``_finalize_log`` publishes
         right after the manifest commit; a crash in between is healed by
-        ``recover()`` (the snapshot dir proves the commit happened).
+        ``recover()`` (the version being the current committed one proves
+        the commit happened).
 
         hardlink mode: links the delta files into
         ``_cdc/_tmp_commit_version=<v>/`` (partition subdirs preserved) —
@@ -461,26 +411,24 @@ class StateStore:
         os.unlink(listing)
 
     def recover(self) -> dict[str, int]:
-        """Crash recovery. Runs automatically at the start of every write
-        operation (writes are single-writer serialized, so no live
-        operation can be mid-flight then; construction alone must NOT
-        recover — a reader instance opened beside an in-flight writer
-        would destroy its staging). Finalizes staged CDC entries whose
-        snapshot commit completed (the ``v_<version>`` dir exists), drops
-        staged entries of versions that never committed, and clears orphan
-        ``_tmp_v_*`` staging dirs. Exactly-once CDC publication per commit
-        follows: a committed append's change entry always becomes visible
-        (here, if not already finalized), and an uncommitted one never
-        does."""
+        """Crash recovery. ``_publish`` runs it first on every write
+        (writes are single-writer serialized, so no live operation can be
+        mid-flight then; construction alone must NOT recover — a reader
+        instance opened beside an in-flight writer would destroy its
+        staging). Removes snapshot dirs no manifest references, finalizes
+        staged CDC entries whose snapshot commit completed, and drops
+        staged entries of versions that never committed. Exactly-once CDC
+        publication per commit follows: a committed append's change entry
+        always becomes visible (here, if not already finalized), and an
+        uncommitted one never does."""
         finalized = dropped = staging = 0
-        cur = self.current_version()
+        committed = self.versions()
+        cur = committed[-1] if committed else None
         # Orphan snapshot dirs: data written but never manifest-committed
-        # (a crash between write and PUT), or pre-migration legacy dirs a
-        # manifest-era store no longer lists. They must go BEFORE the CDC
+        # (a crash between write and PUT). They must go BEFORE the CDC
         # pass — "the v_ dir exists" does NOT mean committed. Truncated
         # manifest files (a crashed PUT) are invalid by checksum and
         # removed by _gc on the next commit; they are ignored here.
-        committed = set(self.versions())
         for d in os.listdir(self.path):
             if d.startswith("v_") and d[2:] not in committed:
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
@@ -490,36 +438,28 @@ class StateStore:
             for d in os.listdir(root):
                 if d.startswith("_tmp_commit_version="):
                     v = d.split("=", 1)[1]
-                    # committed ⟺ the pointer reached this version: staged
-                    # entries only linger from the LAST crashed write
-                    # (single-writer), and every pre-swap crash leaves the
-                    # pointer on an older version
-                    if v == cur:
-                        self._finalize_log(v)
-                        finalized += 1
-                    else:
-                        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-                        dropped += 1
                 elif d.startswith("_staged_v") and d.endswith(".json"):
-                    # copy-mode staged listing (one small PUT): same
-                    # committed ⟺ current-version reasoning as above; the
-                    # finalize re-copy is idempotent and size-checked, so
-                    # it also heals a torn destination file from a crash
-                    # mid-publish
                     v = d[len("_staged_v"):-len(".json")]
-                    if v == cur:
-                        self._finalize_log(v)
-                        finalized += 1
-                    else:
-                        try:
-                            os.unlink(os.path.join(root, d))
-                        except OSError:
-                            pass
-                        dropped += 1
-        for d in os.listdir(self.path):
-            if d.startswith("_tmp_v_"):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-                staging += 1
+                else:
+                    continue
+                # committed ⟺ it is the current version: every write runs
+                # this pass first, so a staged entry can only linger from
+                # the LAST write, and a crash before its manifest PUT left
+                # an older version current. The finalize is idempotent
+                # (copy mode re-copies size-checked, healing a torn file).
+                if v == cur:
+                    self._finalize_log(v)
+                    finalized += 1
+                    continue
+                p = os.path.join(root, d)
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+                else:
+                    try:
+                        os.unlink(p)
+                    except OSError:
+                        pass
+                dropped += 1
         return {
             "cdc_finalized": finalized,
             "cdc_dropped": dropped,
@@ -571,7 +511,7 @@ class StateStore:
     # -- MERGE-shaped transitions --------------------------------------------
 
     def init(self, df: DataFrame) -> None:
-        self._write_snapshot(df)
+        self._publish(df, None)
 
     def append_new(self, incoming: DataFrame) -> int:
         """K1/K2 + J1 — insert rows whose key is not yet in state
@@ -579,40 +519,37 @@ class StateStore:
         dedup distributed (no driver-side hash set, unlike db.py:228-231).
         Also drops duplicate keys *within* the batch — a single micro-batch
         may drain overlapping source files. The write is file-level append:
-        existing snapshot files are hardlinked, only the delta is written.
+        only the delta is written, every existing snapshot file is
+        hardlinked (at 100 TB an ingest of a few thousand rows costs a few
+        part-files, never a table rewrite — db.py:88-96). The first batch
+        of an empty store is its first snapshot, logged to the change log
+        like any other insert batch.
 
         Additive schema evolution: a batch may carry columns the state has
         never seen (they join the table schema; existing rows read NULL via
         mergeSchema) and may omit existing columns (filled NULL, typed from
         the state schema) — Delta's mergeSchema-on-append contract. Returns
-        the number of rows inserted."""
-        self.recover()
-        incoming = incoming.dropDuplicates([self.key])
-        if not self.exists():
-            self.init(incoming)
-            # the bootstrap snapshot is itself an insert batch for CDC
-            v = self.current_version()
-            assert v is not None
-            self._log_append(self._snapshot_dir(v), v)
-            self._finalize_log(v)
-            return self.read().count()  # once-per-store bootstrap only
-        state = self.read()
-        for f in state.schema.fields:
-            if f.name not in incoming.columns:
-                incoming = incoming.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
-                )
-        fresh = incoming.join(
-            state.select(self.key), on=self.key, how="left_anti"
+        the number of rows inserted (observed on the write itself); an
+        empty delta publishes nothing, except as an empty store's first
+        snapshot."""
+        fresh = incoming.dropDuplicates([self.key])
+        first = not self.exists()
+        if not first:
+            state = self.read()
+            for f in state.schema.fields:
+                if f.name not in fresh.columns:
+                    fresh = fresh.withColumn(f.name, F.lit(None).cast(f.dataType))
+            fresh = fresh.join(state.select(self.key), on=self.key, how="left_anti")
+        m = self._publish(
+            fresh, frozenset(), accept=lambda m: first or m["rows"] > 0, log=True
         )
-        return self._append_files(fresh)
+        return m["rows"]
 
     def merge_non_overwrite(
         self,
         updates: DataFrame,
         set_cols: tuple[str, ...],
         partition_value: str | None = None,
-        broadcast_updates: bool = True,
     ) -> int:
         """K3-K6 — ``MERGE ... WHEN MATCHED AND target.col IS NULL THEN
         UPDATE``: fill ``set_cols`` from ``updates`` (keyed by ``self.key``)
@@ -623,21 +560,14 @@ class StateStore:
         e.g. the stage's device_type), only that partition is merged and
         rewritten; all other partitions are hardlinked into the new snapshot.
 
-        ``broadcast_updates`` fits the usual worklist-sized batches; pass
-        False for bulk backfills larger than executor memory — the join then
-        shuffles both sides on the uniform hash key.
+        ``updates`` is broadcast: it is a worklist-sized batch.
 
         Returns the number of target rows matched by an update (observed on
         the write action itself — no separate count job). A merge that
         matches nothing publishes no new version.
         """
-        self.recover()
-        selective = partition_value is not None and len(self.partition_by) == 1
-        state = self.read()
-        target = (
-            state.filter(F.col(self.partition_by[0]) == partition_value)
-            if selective
-            else state
+        target, rewrites = self._scope(
+            None if partition_value is None else [partition_value]
         )
         upd = updates.select(
             F.col(self.key),
@@ -647,30 +577,19 @@ class StateStore:
             # later columns carry fills — and the commit would be discarded
             F.lit(True).alias("__matched"),
         )
-        if broadcast_updates:
-            upd = F.broadcast(upd)
-        obs = Observation()
-        # observe at the ROOT of the written plan: metrics survive AQE
-        # empty-relation pruning (an observe on an empty broadcast side
-        # would be optimised away and never fire)
-        merged = target.join(upd, on=self.key, how="left").observe(
-            obs,
+        merged = target.join(F.broadcast(upd), on=self.key, how="left")
+        for c in set_cols:
+            merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__new_{c}")))
+        m = self._publish(
+            merged,
+            rewrites,
             F.coalesce(
                 F.sum(F.col("__matched").cast("long")), F.lit(0)
             ).alias("n_matched"),
+            accept=lambda m: m["n_matched"] > 0,
+            drop=(*[f"__new_{c}" for c in set_cols], "__matched"),
         )
-        for c in set_cols:
-            merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__new_{c}")))
-        merged = merged.drop(*[f"__new_{c}" for c in set_cols], "__matched")
-        version, out = self._write_uncommitted(merged)
-        n = int(obs.get["n_matched"])
-        if n == 0:
-            self._discard(out)
-            return 0
-        if selective:
-            self._link_other_partitions(out, partition_value)  # type: ignore[arg-type]
-        self._commit(version, out)
-        return n
+        return m["n_matched"]
 
     def merge(
         self,
@@ -679,7 +598,6 @@ class StateStore:
         matched_condition: str | None = None,
         insert_when_not_matched: bool = False,
         partition_value: str | None = None,
-        broadcast_source: bool = True,
     ) -> dict[str, int]:
         """General MERGE INTO (Delta-semantics superset of the specialised
         transitions): join ``source`` to the state on ``self.key`` and apply
@@ -698,8 +616,9 @@ class StateStore:
         The write is the same O(affected partition) machinery as the
         specialised paths: with ``partition_value`` only that partition is
         rewritten (others hardlink), and a merge that updates and inserts
-        nothing publishes no version. Returns {'updated': n, 'inserted': n}
-        observed on the write action itself.
+        nothing publishes no version. The source is broadcast (the small
+        side). Returns {'updated': n, 'inserted': n} observed on the write
+        action itself.
 
         Delta-MERGE error contract: a source with DUPLICATE keys raises
         ``ValueError`` (Delta's "multiple source rows matched" runtime
@@ -720,14 +639,9 @@ class StateStore:
         the fast paths the pipeline uses (append_new is file-level append —
         cheaper than any join-based merge for pure inserts)."""
         when_matched_set = when_matched_set or {}
-        selective = partition_value is not None and len(self.partition_by) == 1
-        state = self.read()
-        target = (
-            state.filter(F.col(self.partition_by[0]) == partition_value)
-            if selective
-            else state
+        target, rewrites = self._scope(
+            None if partition_value is None else [partition_value]
         )
-        target_cols = target.columns
         # per-key multiplicity for the duplicate-source guard; first() values
         # are only ever committed when __src_n == 1, so the non-determinism
         # of first() never reaches state
@@ -735,19 +649,17 @@ class StateStore:
             F.count(F.lit(1)).alias("__src_n"),
             *[F.first(c).alias(c) for c in source.columns if c != self.key],
         )
-        if selective and insert_when_not_matched:
-            other_keys = state.filter(
+        if rewrites is not None and insert_when_not_matched:
+            other_keys = self.read().filter(
                 F.col(self.partition_by[0]) != partition_value
             ).select(self.key)
             checked = checked.join(other_keys, on=self.key, how="left_anti")
-        src = F.broadcast(checked) if broadcast_source else checked
         # full_outer even for update-only merges: a source-only key must
         # reach the projection so its duplicate marker is observable (a
         # left_outer join would drop it and the duplicate-keys ValueError
-        # contract would silently pass); update-only drops those rows via
-        # the __keep filter AFTER the observe. Same shuffle either way.
+        # contract would silently pass). Same shuffle either way.
         j = target.alias("t").join(
-            src.alias("src"),
+            F.broadcast(checked).alias("src"),
             F.col(f"t.{self.key}") == F.col(f"src.{self.key}"),
             "full_outer",
         )
@@ -760,9 +672,10 @@ class StateStore:
         do_insert = (
             (~has_t & has_s) if insert_when_not_matched else F.lit(False)
         )
+        is_dup = F.coalesce(F.col("src.__src_n"), F.lit(0)) > 1
         src_cols = set(source.columns)
         out_cols = []
-        for c in target_cols:
+        for c in target.columns:
             current = F.col(f"t.{c}")
             updated = (
                 F.expr(when_matched_set[c]) if c in when_matched_set else current
@@ -774,48 +687,38 @@ class StateStore:
                 .otherwise(current)
                 .alias(c)
             )
-        obs = Observation()
         # metrics must ride the written plan itself (no separate count job),
-        # so the match/insert flags travel through the projection as hidden
-        # columns and the observe sums them at the root
-        merged = (
-            j.select(
-                *out_cols,
-                do_update.cast("long").alias("__upd"),
-                do_insert.cast("long").alias("__ins"),
-                (has_t | do_insert).alias("__keep"),
-                (F.coalesce(F.col("src.__src_n"), F.lit(0)) > 1)
-                .cast("long")
-                .alias("__dup"),
-            )
-            # observe BEFORE the __keep filter: dup markers on source-only
-            # keys must count even when update-only merges then discard them
-            .observe(
-                obs,
-                F.coalesce(F.sum("__upd"), F.lit(0)).alias("n_updated"),
-                F.coalesce(F.sum("__ins"), F.lit(0)).alias("n_inserted"),
-                F.coalesce(F.sum("__dup"), F.lit(0)).alias("n_dup_src"),
-            )
-            .filter(F.col("__keep"))
-            .drop("__upd", "__ins", "__keep", "__dup")
+        # so the match/insert/dup flags travel through the projection as
+        # hidden columns the root observe sums. Source-only rows are dropped
+        # unless inserted — except duplicate-key rows, which stay so the
+        # observe counts them even in update-only merges (any one of them
+        # discards the whole write).
+        merged = j.filter(has_t | do_insert | is_dup).select(
+            *out_cols,
+            do_update.cast("long").alias("__upd"),
+            do_insert.cast("long").alias("__ins"),
+            is_dup.cast("long").alias("__dup"),
         )
-        version, out = self._write_uncommitted(merged)
-        m = obs.get
-        if int(m["n_dup_src"]) > 0:
-            self._discard(out)
-            raise ValueError(
-                "MERGE source contains duplicate keys "
-                f"(key column {self.key!r}); like Delta MERGE, multiple "
-                "source rows per key are an error — dedupe the source first"
-            )
-        n_upd, n_ins = int(m["n_updated"]), int(m["n_inserted"])
-        if n_upd == 0 and n_ins == 0:
-            self._discard(out)
-            return {"updated": 0, "inserted": 0}
-        if selective:
-            self._link_other_partitions(out, partition_value)  # type: ignore[arg-type]
-        self._commit(version, out)
-        return {"updated": n_upd, "inserted": n_ins}
+
+        def accept(m: dict[str, int]) -> bool:
+            if m["n_dup_src"] > 0:
+                raise ValueError(
+                    "MERGE source contains duplicate keys "
+                    f"(key column {self.key!r}); like Delta MERGE, multiple "
+                    "source rows per key are an error — dedupe the source first"
+                )
+            return m["n_updated"] > 0 or m["n_inserted"] > 0
+
+        m = self._publish(
+            merged,
+            rewrites,
+            F.coalesce(F.sum("__upd"), F.lit(0)).alias("n_updated"),
+            F.coalesce(F.sum("__ins"), F.lit(0)).alias("n_inserted"),
+            F.coalesce(F.sum("__dup"), F.lit(0)).alias("n_dup_src"),
+            accept=accept,
+            drop=("__upd", "__ins", "__dup"),
+        )
+        return {"updated": m["n_updated"], "inserted": m["n_inserted"]}
 
     def changes(
         self, since: str, until: str | None = None, include_preimage: bool = False
@@ -921,73 +824,36 @@ class StateStore:
                 out["" if rel == "." else rel] = n
         return out
 
-    def compact(
-        self,
-        partition_value: str | None = None,
-        min_files: int = 2,
-        target_partitions: int = 1,
-    ) -> int:
-        """Maintenance: rewrite fragmented partitions into
-        ``target_partitions`` files each. File-level appends trade write
-        amplification for file-count growth (one+ part-file per ingest);
-        unchecked, a year of 15-row polls is thousands of tiny files whose
-        open/footer overhead dominates every scan — the classic LSM/Delta
-        small-file problem, solved the same way (Delta OPTIMIZE / Iceberg
-        rewrite): an offline rewrite that changes the file layout and
-        nothing else.
+    def compact(self, partition_value: str | None = None, min_files: int = 2) -> int:
+        """Maintenance: rewrite each fragmented partition — at least
+        ``min_files`` data files — into one file. File-level appends trade
+        write amplification for file-count growth (one+ part-file per
+        ingest); unchecked, a year of 15-row polls is thousands of tiny
+        files whose open/footer overhead dominates every scan — the classic
+        LSM/Delta small-file problem, solved the same way (Delta OPTIMIZE /
+        Iceberg rewrite): an offline rewrite that changes the file layout
+        and nothing else.
 
-        With ``partition_value``, only that partition compacts and all
-        others hardlink (same O(affected partition) shape as the merges);
-        otherwise every partition with at least ``min_files`` files is
-        rewritten. Readers are unaffected (manifest-committed snapshot). Returns
-        the number of partitions compacted."""
-        counts = self.file_counts()
-        if partition_value is not None and len(self.partition_by) == 1:
-            pdir = f"{self.partition_by[0]}={partition_value}"
-            if counts.get(pdir, 0) < min_files:
-                return 0
-            part = self.read().filter(
-                F.col(self.partition_by[0]) == partition_value
-            )
-            version, out = self._write_uncommitted(
-                part.repartition(target_partitions)
-            )
-            self._link_other_partitions(out, partition_value)
-            self._commit(version, out)
-            return 1
-        # >= to match the selective path: a partition at exactly min_files
-        # compacts in both modes
-        fragmented = {d for d, n in counts.items() if n >= min_files}
-        if not fragmented:
-            return 0
+        With ``partition_value``, only that partition may compact; every
+        partition left alone hardlinks (same O(affected partition) shape as
+        the merges). A store not partitioned by exactly one column compacts
+        as a whole. Readers are unaffected (manifest-committed snapshot).
+        Returns the number of partitions compacted."""
+        fragmented = {d for d, n in self.file_counts().items() if n >= min_files}
+        values = None
         if len(self.partition_by) == 1:
             pcol = self.partition_by[0]
-            frag_vals = [
+            values = {
                 d.split("=", 1)[1] for d in fragmented if d.startswith(f"{pcol}=")
-            ]
-            if not frag_vals:
-                return 0
-            part = self.read().filter(F.col(pcol).isin(frag_vals))
-            version, out = self._write_uncommitted(
-                part.repartition(target_partitions)
-            )
-            # non-fragmented partitions ride along as hardlinks
-            old_dir = self._snapshot_dir(self.current_version())
-            for entry in os.listdir(old_dir):
-                src = os.path.join(old_dir, entry)
-                if (
-                    os.path.isdir(src)
-                    and entry.startswith(f"{pcol}=")
-                    and entry not in fragmented
-                ):
-                    self._link_tree(src, os.path.join(out, entry))
-            self._commit(version, out)
-            return len(frag_vals)
-        version, out = self._write_uncommitted(
-            self.read().repartition(target_partitions)
-        )
-        self._commit(version, out)
-        return 1
+            }
+            if partition_value is not None:
+                values &= {partition_value}
+            fragmented = values
+        if not fragmented:
+            return 0
+        target, rewrites = self._scope(values)
+        self._publish(target.repartition(1), rewrites)
+        return 1 if values is None else len(values)
 
     def _quarantined_delete(self, keys: DataFrame) -> int:
         """K7 — delete by key. The reference name-mangles this and warns
@@ -1003,11 +869,10 @@ class StateStore:
             stacklevel=2,
         )
         state = self.read()
+        before = state.count()
         kept = state.join(keys.select(self.key), on=self.key, how="left_anti")
-        removed = state.count() - kept.count()
-        if removed:
-            self._write_snapshot(kept)
-        return removed
+        m = self._publish(kept, None, accept=lambda m: m["rows"] < before)
+        return before - m["rows"]
 
     def mark_uploaded(
         self, dmp_ids: DataFrame, partition_value: str | None = None
@@ -1020,29 +885,16 @@ class StateStore:
         — the same O(affected partition) path as ``merge_non_overwrite``.
         Returns the number of rows newly flagged; flagging nothing new
         publishes no new version."""
-        self.recover()
-        selective = partition_value is not None and len(self.partition_by) == 1
-        state = self.read()
-        target = (
-            state.filter(F.col(self.partition_by[0]) == partition_value)
-            if selective
-            else state
+        target, rewrites = self._scope(
+            None if partition_value is None else [partition_value]
         )
         flagged = dmp_ids.select(F.col("dmp_id"), F.lit(True).alias("__up"))
-        obs = Observation()
         merged = (
             target.join(F.broadcast(flagged), on="dmp_id", how="left")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        (
-                            F.col("__up").isNotNull()
-                            & ~F.coalesce(F.col("is_uploaded"), F.lit(False))
-                        ).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("n_flipped"),
+            .withColumn(
+                "__flip",
+                F.col("__up").isNotNull()
+                & ~F.coalesce(F.col("is_uploaded"), F.lit(False)),
             )
             .withColumn(
                 "is_uploaded",
@@ -1050,14 +902,14 @@ class StateStore:
                     F.col("is_uploaded")
                 ),
             )
-            .drop("__up")
         )
-        version, out = self._write_uncommitted(merged)
-        n = int(obs.get["n_flipped"])
-        if n == 0:
-            self._discard(out)
-            return 0
-        if selective:
-            self._link_other_partitions(out, partition_value)  # type: ignore[arg-type]
-        self._commit(version, out)
-        return n
+        m = self._publish(
+            merged,
+            rewrites,
+            F.coalesce(F.sum(F.col("__flip").cast("long")), F.lit(0)).alias(
+                "n_flipped"
+            ),
+            accept=lambda m: m["n_flipped"] > 0,
+            drop=("__up", "__flip"),
+        )
+        return m["n_flipped"]

